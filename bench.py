@@ -95,9 +95,12 @@ def main():
                 secs.append(round(time.time() - t0, 3))
         except Exception as exc:  # noqa: BLE001 - survive anything
             errors[key] = f"{type(exc).__name__}: {exc}"[:120]
-        if secs:
+        else:
+            # a query counts in the timings only if every rep completed;
+            # one that failed on a later rep is an error, not a wall
             timings[key] = round(min(secs), 2)
             first_rep[key] = round(secs[0], 2)
+        if secs:
             all_reps[name] = secs
 
     total = round(sum(timings.values()), 2)

@@ -78,32 +78,35 @@ def loop_actions(spark):
     streaming drain right-sizing. Only valid when the loop's values are
     partition-count independent (min/sum aggregates, equi-joins,
     deterministic total orders — every loop in this repo); both confs
-    are restored on exit and the RETURNED frames execute under the
-    caller's conf.
+    are restored exactly on exit (a conf that was unset before entry is
+    unset again, not set to its default) and the RETURNED frames
+    execute under the caller's conf.
 
     Session-scope caveat: the override mutates SESSION conf, so it
     assumes the single-threaded driver every caller here is — a
     concurrent query submitted on the same SparkSession while a loop
-    runs would execute with AQE off and loop-sized partitions, and a
-    conf that was UNSET before entry is restored as an explicit set of
-    its read-back default. If concurrent driver threads are ever
-    introduced, scope the loop's confs per-statement instead (hints /
-    a dedicated session clone)."""
+    runs would execute with AQE off and loop-sized partitions. If
+    concurrent driver threads are ever introduced, scope the loop's
+    confs per-statement instead (hints / a dedicated session clone)."""
     import contextlib
     import os
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
 
     @contextlib.contextmanager
     def _cm():
         n = int(os.environ.get("SPARK_GRAFT_LOOP_PARTITIONS", 8))
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+        prev = {k: spark.conf.get(k, None) for k in keys}
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
         try:
             yield
         finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
     return _cm()
 
@@ -126,6 +129,24 @@ def bind_once(expr: Column, fn) -> Column:
     through a single-element array forces one evaluation regardless of
     how many times ``fn`` uses its argument."""
     return F.element_at(F.transform(F.array(expr), fn), 1)
+
+
+#: lambda variable bind_sql binds its Column operand to
+BOUND = "__pc"
+
+
+def bind_sql(expr: Column, body: str) -> Column:
+    """``bind_once`` with a SQL body: evaluate ``expr`` once per row and
+    run the SQL text ``body`` over it as the lambda variable ``BOUND``.
+    This is how SQL text composes over an operand that only exists as a
+    Column (a pandas-UDF output, an opaque callable's result): one parse
+    for the body, whatever its size. The operand is never spliced into
+    the text by name, so it may be any Column, lambda variables of an
+    enclosing Python HOF included; a nested ``BOUND`` binding in
+    ``body`` shadows this one innermost-first."""
+    return F.element_at(
+        F.call_function("transform", F.array(expr), F.expr(f"{BOUND} -> {body}")), 1
+    )
 
 
 def _string_bucket(name: str, prefix_skip: int = 0) -> Column:

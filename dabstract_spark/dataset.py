@@ -521,8 +521,8 @@ class Dataset:
         if overwrite or not done:
             cinfo = dict(info or {})
             cinfo.setdefault("dtype", dict(self._df.dtypes).get(key))
-            # name (not F.col): lets the chain compose SQL-twin stages
-            # into one parse (chain.expr_info, optimization r12)
+            # name (not F.col): lets the chain compose its native
+            # stages over the name in one parse (ProcessingChain._compose)
             feat = chain.expr(key, cinfo)
             cols = [F.col(ROW_ID), feat.alias("__feat")]
             writer_cols = [ROW_ID]

@@ -395,8 +395,13 @@ def _single_task_components(
     """(__id, __comp) labels for every edge participant, computed by
     union-find inside ONE executor task — callers guarantee the edge
     set is bounded (see ``_cc_local_max``). Deterministic: the label is
-    the component's minimum member id, independent of edge order."""
-    id_dtype = dict(edges.dtypes)[src_col]
+    the component's minimum member id, independent of edge order.
+    Callers drop NULL endpoints first (Arrow would hand a nullable id to
+    pandas as a float NaN, and NaN != NaN never terminates ``find``);
+    both endpoints are cast to the type the distributed loop's
+    src/dst union widens them to."""
+    a, b = edges.selectExpr(f"`{src_col}` AS __a"), edges.selectExpr(f"`{dst_col}` AS __b")
+    id_dtype = a.union(b).dtypes[0][1]
 
     def _uf(batches):
         import pandas as pd
@@ -434,7 +439,7 @@ def _single_task_components(
         )
 
     return (
-        edges.select(src_col, dst_col)
+        edges.select(F.col(src_col).cast(id_dtype), F.col(dst_col).cast(id_dtype))
         .coalesce(1)
         .mapInPandas(_uf, f"__id {id_dtype}, __comp {id_dtype}")
     )
@@ -475,7 +480,9 @@ def connected_components(
     # equality test); above it, the propagation loop below runs
     # unchanged. The edge pipeline runs at most one extra bounded pass
     # for the probe — the loop itself re-executes `sym` every round, so
-    # callers already keep `edges` cheap (checkpointed).
+    # callers already keep `edges` cheap (checkpointed). A NULL
+    # endpoint is no edge, on both paths.
+    edges = edges.where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
     local_max = _cc_local_max()
     if local_max > 0 and edges.limit(local_max + 1).count() <= local_max:
         # LAZY checkpoint: labels feeds BOTH union legs (clustered + the

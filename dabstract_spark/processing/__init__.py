@@ -1,15 +1,16 @@
 """Processing chains: dabstract's per-example UDF-pipeline framework
-re-expressed as composable Spark Column expressions.
+re-expressed as one fused Spark expression per chain.
 
-Reference: /root/reference/dabstract/dataprocessor/processing_chain.py and
-processors/processors.py. Here a Processor is a *Column-expression
-factory* evaluated at plan-compile time: native pyspark.sql.functions
-where the semantics allow (Scaler, Logarithm, Windowing, Aggregation,
-Normalizer, Framing, ExpandDims — all whole-stage-codegen'd, zero
-Python), Arrow-batched pandas UDFs only where Spark has no primitive
-(FFT, Filterbank, FIRFilter, Resample). The reference's per-example
-``info`` side-channel becomes a static metadata dict threaded through
-``expr()`` at compile time (SURVEY §1.1: metadata as columns/statics).
+Reference: dabstract ``dataprocessor/processing_chain.py`` and
+``processors/processors.py``. Here a Processor is evaluated at
+plan-compile time and has one definition: native stages (Scaler,
+Logarithm, Windowing, Aggregation, Normalizer, Framing, ExpandDims, and
+sparse Filterbank / short FIRFilter) are SQL text parsed once and
+whole-stage-codegen'd with zero Python; Arrow-batched pandas UDFs build
+a Column only where Spark has no primitive (FFT, Resample, dense
+Filterbank, long FIRFilter). The reference's per-example ``info``
+side-channel becomes a static metadata dict threaded through the chain
+at compile time (SURVEY §1.1: metadata as columns/statics).
 """
 
 from dabstract_spark.processing.chain import ProcessingChain

@@ -1,11 +1,12 @@
 """ProcessingChain: named-stage composition of processors into ONE Column
-expression (reference /root/reference/dabstract/dataprocessor/processing_chain.py:37-189).
+expression (reference: dabstract ``dataprocessor/processing_chain.py:37-189``).
 
 The reference folds data row-by-row through Python processors, threading
-a per-example info dict. Here the chain composes Column expressions at
+a per-example info dict. Here the chain composes one expression at
 plan-compile time: ``expr()`` returns the fused expression (Catalyst sees
-one tree — native stages stay inside whole-stage codegen; pandas-UDF
-stages become single Arrow exchanges), and the info dict is threaded
+one tree — native stages are SQL text parsed once and stay inside
+whole-stage codegen; pandas-UDF stages become single Arrow exchanges;
+``_compose`` joins the two), and the info dict is threaded
 STATICALLY between stages, so inter-stage contracts (e.g. Filterbank
 checking the FFT's nfft, reference processors.py:387-394) fail at
 plan-build instead of mid-job.
@@ -18,6 +19,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from dabstract_spark.core import BOUND, bind_sql
 from dabstract_spark.processing import processors as P
 
 
@@ -80,73 +82,60 @@ class ProcessingChain:
     # ------------------------------------------------------------------ #
     # compilation (reference .process/.__call__, :97-111)
     # ------------------------------------------------------------------ #
-    def expr(self, col: Column | str, info: dict | None = None) -> Column:
-        c, _ = self.expr_info(col, info)
-        return c
+    def _compose(self, col, info, inverse=False, fit_df=None) -> tuple[Column, dict]:
+        """The one composition loop behind expr_info, inv_expr and fit.
 
-    @staticmethod
-    def _post_dtype(proc, info: dict) -> None:
-        """A stage's output dtype drives the next stage's elementwise
-        dispatch; processors that reshape set it explicitly."""
-        if isinstance(proc, P.ExpandDims):
-            info["dtype"] = f"array<{info.get('dtype', 'double')}>"
-        elif isinstance(proc, (P.Framing,)):
-            info["dtype"] = "array<array<double>>"
-        elif isinstance(proc, (P.FFT, P.Filterbank, P.FIRFilter, P.Resample)):
-            info["dtype"] = "array<double>"
-
-    def expr_info(self, col: Column | str, info: dict | None = None) -> tuple[Column, dict]:
-        """Compose all stages; returns (expression, final info dict).
-
-        Optimization r12 (guide §1.2, driver-side): stages that provide
-        a one-parse SQL twin (``Processor.sql``) are composed as SQL
-        text and materialized with a single ``F.expr`` parse — the
-        Column-by-Column form of an unrolled-literal stage (Filterbank,
-        FIRFilter) costs hundreds of py4j round trips for the identical
-        expression tree. The first stage without a SQL form flushes the
-        accumulated text to a Column and the rest composes Column-wise,
-        so mixed native/UDF chains still get the cheap prefix. Results
-        are identical by construction (each sql() mirrors its expr()
-        tree node for node; pinned by test_processing.py equality
-        tests)."""
+        The running operand is SQL text over either a column name (a
+        string input) or one bound Column (a Column input, or a Python
+        stage's output, as ``core.BOUND``). Native stages append to the
+        text; a Python stage (``sql``/``inv_sql`` is None) receives the
+        text materialized as a Column and its result becomes the new
+        bound Column. So a chain costs one ``F.expr`` parse per run of
+        native stages plus the Python stages' own Columns, and no native
+        stage is ever built Column by Column. ``fit_df`` fits each
+        stateful stage on the operand as processed by all prior stages."""
         info = dict(info or {})
-        sql_acc = None
         if isinstance(col, str):
             # backtick-quoted TOP-LEVEL column name: embedded backticks
             # are doubled per the SQL quoting rule. Note the string-key
             # contract here is "a column name", unlike F.col(), where a
             # dotted string may resolve a nested field — dataset
             # add_feature/apply keys are top-level by construction.
-            sql_acc = f"`{col.replace('`', '``')}`"
-            c = None
+            bound, text = None, f"`{col.replace('`', '``')}`"
         else:
-            c = col
-        for proc in self._chain:
-            if sql_acc is not None:
-                got = proc.sql(sql_acc, info)
-                if got is not None:
-                    sql_acc, upd = got
-                    info.update(upd)
-                    self._post_dtype(proc, info)
-                    continue
-                # flush the SQL prefix to a Column, continue Column-wise
-                c = F.expr(sql_acc)
-                sql_acc = None
-            c, upd = proc.expr(c, info)
+            bound, text = col, BOUND
+
+        def column() -> Column:
+            if bound is None:
+                return F.expr(text)
+            return bound if text == BOUND else bind_sql(bound, text)
+
+        for proc in reversed(self._chain) if inverse else self._chain:
+            if fit_df is not None and callable(getattr(proc, "fit", None)):
+                proc.fit(fit_df, column(), info)
+            got = proc.inv_sql(text, info) if inverse else proc.sql(text, info)
+            if got is None:
+                c = column()
+                bound, upd = (proc.inv_expr(c, info), {}) if inverse else proc.expr(c, info)
+                text = BOUND
+            else:
+                text, upd = (got, {}) if inverse else got
             info.update(upd)
-            self._post_dtype(proc, info)
-        if sql_acc is not None:
-            c = F.expr(sql_acc)
-        return c, info
+        return column(), info
+
+    def expr(self, col: Column | str, info: dict | None = None) -> Column:
+        c, _ = self.expr_info(col, info)
+        return c
+
+    def expr_info(self, col: Column | str, info: dict | None = None) -> tuple[Column, dict]:
+        """Compose all stages; returns (expression, final info dict)."""
+        return self._compose(col, info)
 
     def inv_expr(self, col: Column | str, info: dict | None = None) -> Column:
         """Reverse-composed inverses (reference inv_process, :113-120);
-        raises if any stage lacks one, like the reference's assert."""
-        c = F.col(col) if isinstance(col, str) else col
-        info = dict(info or {})
-        for proc in reversed(self._chain):
-            c = proc.inv_expr(c, info)
-        return c
+        raises if any stage lacks one, like the reference's assert. The
+        info dict is the forward input's, unchanged between stages."""
+        return self._compose(col, info, inverse=True)[0]
 
     # ------------------------------------------------------------------ #
     # DataFrame-level application
@@ -160,8 +149,8 @@ class ProcessingChain:
     ) -> DataFrame:
         info = dict(info or {})
         info.setdefault("dtype", dict(df.dtypes).get(key))
-        # pass the NAME, not F.col(key): a string input lets expr_info
-        # compose SQL-twin stages into one parse (see expr_info)
+        # pass the NAME, not F.col(key): native stages then compose over
+        # the name as text in one parse (see _compose)
         return df.withColumn(new_key or key, self.expr(key, info))
 
     # ------------------------------------------------------------------ #
@@ -182,13 +171,7 @@ class ProcessingChain:
         info = dict(info or {})
         info.setdefault("dtype", dict(df.dtypes).get(key))
         fit_df = df.sample(fraction=init_subsample, seed=seed) if init_subsample else df
-        c: Column = F.col(key)
-        cur = dict(info)
-        for proc in self._chain:
-            if hasattr(proc, "fit") and callable(getattr(proc, "fit")):
-                proc.fit(fit_df, c, cur)
-            c, upd = proc.expr(c, cur)
-            cur.update(upd)
+        self._compose(key, info, fit_df=fit_df)
         return self
 
     # ------------------------------------------------------------------ #

@@ -1,17 +1,39 @@
-"""The scalar/array processor library (reference:
-/root/reference/dabstract/dataprocessor/processors/processors.py:16-611).
+"""The scalar/array processor library (reference: dabstract
+``dataprocessor/processors/processors.py``).
 
-Every processor implements::
+Each processor defines what it computes exactly once, in one of two
+forms::
 
-    expr(col, info) -> (Column, info_updates)     # plan-compile time
-    inv_expr(col, info) -> Column                 # optional inverse
-    fit(df, col, info) -> None                    # optional estimator
+    sql(col_sql, info) -> (sql, info_updates) | None   # native stage
+    expr(col, info) -> (Column, info_updates)          # Python stage
+    inv_sql(col_sql, info) -> sql | None               # optional inverse
+    fit(df, col, info) -> None                         # optional estimator
+
+Native stages (Dummy, Scaler, Normalizer, Logarithm, Windowing,
+ExpandDims, Aggregation, Framing, and Filterbank / FIRFilter up to their
+size caps) are SQL text over the operand's text; the chain
+(``chain.py``) concatenates them and parses the whole run ONCE with
+``F.expr``. Python stages (FFT, Resample, ExternalProcessor, and the
+Arrow-UDF forms of Filterbank past ``MAX_NATIVE_NNZ`` and FIRFilter past
+``MAX_NATIVE_TAPS``) build a Column: ``sql()`` returns None for them and
+the chain calls ``expr()``. One helper joins the two: SQL stages after a
+Python stage (or over a Column input) are bound to that Column once by
+``core.bind_sql``. ``Processor.expr`` of a purely native stage is the
+same bind over its own SQL, so a direct caller gets the chain's tree;
+Filterbank's and FIRFilter's ``expr`` is their Arrow form.
+
+SQL text rules: literals go through ``core.sql_double`` (repr
+round-trips exactly and Spark parses D-suffixed literals with
+Double.parseDouble, so a literal is bit-identical to ``F.lit``); an
+operand referenced more than once is bound once (``_bind_operand``)
+instead of copied; lambda variables are ``__p*`` names.
 
 ``info`` is the static metadata dict (``fs``, ``time_step``, ``nfft``,
 ``dtype`` — the reference's per-example info side-channel, resolved at
 chain-compile time; SURVEY §7 "info propagation"). ``dtype`` is the Spark
-simpleString of the input column so elementwise processors dispatch
-between scalar and array form.
+simpleString of the operand so elementwise processors dispatch between
+scalar and array form; a stage that changes it returns the new
+``dtype`` in its info updates.
 
 Numerics note: the container has numpy but not scipy/librosa, so window
 functions, FIR design (windowed sinc) and FFT resampling are implemented
@@ -27,45 +49,13 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
-
-def _is_array(info: dict) -> bool:
-    return str(info.get("dtype", "")).startswith("array")
+from dabstract_spark.core import BOUND, bind_sql, sql_double
 
 
-def _elementwise(col: Column, f, info: dict) -> Column:
-    """Apply a scalar Column function over a scalar or (possibly nested)
-    array column, dispatching on the compile-time dtype."""
-    dt = str(info.get("dtype", ""))
-    if dt.startswith("array<array"):
-        return F.transform(col, lambda row: F.transform(row, f))
-    if dt.startswith("array"):
-        return F.transform(col, f)
-    return f(col)
-
-
-# --------------------------------------------------------------------- #
-# One-parse SQL twins (optimization r12, guide §1.2 driver-side work).
-#
-# ``expr()`` builds its Column tree one py4j round trip per operation —
-# for the unrolled-literal processors (Filterbank, FIRFilter) that is
-# hundreds to >1500 round trips per plan build on a host whose IPC
-# round trip costs 0.2-6 ms. ``sql()`` composes the IDENTICAL expression
-# tree as ONE SQL string that the chain parses with a single F.expr.
-# Identical means: same operator nesting and associativity (SQL + and *
-# are left-associative like Column operator chaining, parentheses add
-# no AST node), literals via core.sql_double (repr round-trips exactly,
-# and Spark parses D-suffixed literals with Double.parseDouble — bit-
-# identical to F.lit), lambda-variable names irrelevant to results.
-# Every sql() body mirrors its expr() line by line; tests pin
-# equality of results on the fixture tables (test_processing.py).
-#
-# A processor without a SQL form (Arrow-UDF stages, opaque callables)
-# returns None and the chain falls back to Column composition from that
-# stage on — correctness never depends on this path.
-# --------------------------------------------------------------------- #
-def _elementwise_sql(col_sql: str, f, info: dict) -> str:
-    """SQL twin of _elementwise: f maps an operand SQL string to the
-    scalar expression SQL."""
+def _elementwise(col_sql: str, f, info: dict) -> str:
+    """Apply ``f`` (operand SQL -> scalar expression SQL) over a scalar or
+    (possibly nested) array operand, dispatching on the compile-time
+    dtype."""
     dt = str(info.get("dtype", ""))
     if dt.startswith("array<array"):
         return f"transform({col_sql}, __pr -> transform(__pr, __px -> {f('__px')}))"
@@ -74,27 +64,54 @@ def _elementwise_sql(col_sql: str, f, info: dict) -> str:
     return f(f"({col_sql})")
 
 
+def _bind_operand(col_sql: str, body_fn) -> str:
+    """Multi-reference guard: a stage whose SQL references its operand k
+    times would copy the accumulated prefix k times — after an
+    unrolled-literal stage (Filterbank ~KBs) the one-parse string would
+    grow multiplicatively per stage. Non-trivial operands are therefore
+    bound ONCE as a lambda variable (the core.bind_once
+    element_at/transform/array spelling — value-identical, evaluated
+    once per row). Trivial operands (a quoted name or short expression)
+    are spliced directly."""
+    if len(col_sql) <= 64:
+        return body_fn(f"({col_sql})")
+    return f"element_at(transform(array({col_sql}), __pc -> {body_fn('__pc')}), 1)"
+
+
 class Processor:
-    """Base class (reference processing_chain.py:14-24). Subclasses are
-    Column-expression factories with optional inverse and fit."""
+    """Base class (reference processing_chain.py:14-24): a native stage
+    overrides ``sql``, a Python stage overrides ``expr``; either may add
+    an inverse in the same form (``inv_sql`` / ``inv_expr``) and a
+    ``fit``."""
 
     #: JSON-able constructor parameters (for chain save/load)
     def __init__(self, **params):
         self.params = params
 
-    def expr(self, col: Column, info: dict) -> tuple[Column, dict]:
-        return col, {}
-
     def sql(self, col_sql: str, info: dict) -> tuple[str, dict] | None:
-        """Optional one-parse SQL twin of ``expr`` (see module comment
-        above ``_elementwise_sql``). None = no SQL form; the chain then
-        composes this stage (and the rest) Column-wise."""
+        """This stage as SQL text over the operand text ``col_sql``.
+        None marks a Python stage: the chain calls ``expr`` instead."""
+        return None
+
+    def expr(self, col: Column, info: dict) -> tuple[Column, dict]:
+        """This stage as a Column over ``col``. Python stages override
+        it; a native stage's is its ``sql`` bound over ``col``."""
+        got = self.sql(BOUND, info)
+        if got is None:
+            raise NotImplementedError(f"{type(self).__name__} defines neither sql() nor expr()")
+        return bind_sql(col, got[0]), got[1]
+
+    def inv_sql(self, col_sql: str, info: dict) -> str | None:
+        """The inverse as SQL text; None = no SQL inverse (see inv_expr)."""
         return None
 
     def inv_expr(self, col: Column, info: dict) -> Column:
-        raise NotImplementedError(
-            f"{type(self).__name__} has no inverse (reference chains assert the same)"
-        )
+        got = self.inv_sql(BOUND, info)
+        if got is None:
+            raise NotImplementedError(
+                f"{type(self).__name__} has no inverse (reference chains assert the same)"
+            )
+        return bind_sql(col, got)
 
     # fitted state (JSON-able) — None for stateless processors
     fitted: dict | None = None
@@ -133,42 +150,27 @@ class Scaler(Processor):
     ``uint16`` → x/2^16, ``int16`` → x/(2^15-1), ``wav_2_01`` → (x+1)/2.
     Invertible. Pure elementwise expression."""
 
+    _SCALE = {"uint16": float(2**16), "int16": float(2**15 - 1)}
+
     def __init__(self, type: str):
         super().__init__(type=type)
         if type not in ("uint16", "int16", "wav_2_01"):
             raise ValueError(f"unknown Scaler type '{type}'")
         self.type = type
 
-    def _fwd(self, x):
-        if self.type == "uint16":
-            return x / F.lit(float(2**16))
-        if self.type == "int16":
-            return x / F.lit(float(2**15 - 1))
-        return (x + F.lit(1.0)) / F.lit(2.0)
-
-    def _bwd(self, x):
-        if self.type == "uint16":
-            return x * F.lit(float(2**16))
-        if self.type == "int16":
-            return x * F.lit(float(2**15 - 1))
-        return x * F.lit(2.0) - F.lit(1.0)
-
-    def expr(self, col, info):
-        return _elementwise(col, self._fwd, info), {}
-
     def sql(self, col_sql, info):
-        from dabstract_spark.core import sql_double
-
-        if self.type == "uint16":
-            f = lambda x: f"{x} / {sql_double(float(2**16))}"  # noqa: E731
-        elif self.type == "int16":
-            f = lambda x: f"{x} / {sql_double(float(2**15 - 1))}"  # noqa: E731
-        else:
+        if self.type == "wav_2_01":
             f = lambda x: f"({x} + 1.0D) / 2.0D"  # noqa: E731
-        return _elementwise_sql(col_sql, f, info), {}
+        else:
+            f = lambda x: f"{x} / {sql_double(self._SCALE[self.type])}"  # noqa: E731
+        return _elementwise(col_sql, f, info), {}
 
-    def inv_expr(self, col, info):
-        return _elementwise(col, self._bwd, info)
+    def inv_sql(self, col_sql, info):
+        if self.type == "wav_2_01":
+            f = lambda x: f"{x} * 2.0D - 1.0D"  # noqa: E731
+        else:
+            f = lambda x: f"{x} * {sql_double(self._SCALE[self.type])}"  # noqa: E731
+        return _elementwise(col_sql, f, info)
 
 
 class Logarithm(Processor):
@@ -183,32 +185,21 @@ class Logarithm(Processor):
             raise ValueError(f"unknown Logarithm type '{type}'")
         self.type = type
 
-    def expr(self, col, info):
-        # NB: 1-param lambdas only — HOF transform() counts the callable's
-        # parameters, and F.log's optional base arg would trigger
-        # (element, index) semantics
-        f = (
-            (lambda x: F.lit(20.0) * F.log10(x))
-            if self.type == "base10"
-            else (lambda x: F.log(x))
-        )
-        return _elementwise(col, f, info), {}
-
     def sql(self, col_sql, info):
         f = (
             (lambda x: f"20.0D * log10({x})")
             if self.type == "base10"
             else (lambda x: f"ln({x})")
         )
-        return _elementwise_sql(col_sql, f, info), {}
+        return _elementwise(col_sql, f, info), {}
 
-    def inv_expr(self, col, info):
+    def inv_sql(self, col_sql, info):
         f = (
-            (lambda x: F.pow(F.lit(10.0), x / F.lit(20.0)))
+            (lambda x: f"pow(10.0D, {x} / 20.0D)")
             if self.type == "base10"
-            else (lambda x: F.exp(x))
+            else (lambda x: f"exp({x})")
         )
-        return _elementwise(col, f, info)
+        return _elementwise(col_sql, f, info)
 
 
 def window_values(window_func: str, n: int, periodic: bool = True) -> np.ndarray:
@@ -230,39 +221,11 @@ def window_values(window_func: str, n: int, periodic: bool = True) -> np.ndarray
     raise ValueError(f"unknown window '{window_func}'")
 
 
-def _window_expr(window_func: str, periodic: bool):
-    """(x, i, n) -> windowed x as a Column expression with DYNAMIC length
+def _window(window_func: str, periodic: bool):
+    """(x_sql, i_sql, n_sql) -> windowed x with a DYNAMIC length n
     (handles ragged arrays — no literal window table needed)."""
     if window_func in (None, "none", "None", "rect", "boxcar"):
         return lambda x, i, n: x
-    two_pi = F.lit(2.0 * math.pi)
-
-    def w(i, n):
-        m = n.cast("double") if periodic else (n - 1).cast("double")
-        phase = two_pi * i.cast("double") / m
-        if window_func == "hamming":
-            return F.lit(0.54) - F.lit(0.46) * F.cos(phase)
-        if window_func in ("hann", "hanning"):
-            return F.lit(0.5) - F.lit(0.5) * F.cos(phase)
-        if window_func == "blackman":
-            return (
-                F.lit(0.42)
-                - F.lit(0.5) * F.cos(phase)
-                + F.lit(0.08) * F.cos(F.lit(2.0) * phase)
-            )
-        raise ValueError(f"unknown window '{window_func}'")
-
-    return lambda x, i, n: x * w(i, n)
-
-
-def _window_sql(window_func: str, periodic: bool):
-    """SQL twin of _window_expr: (x_sql, i_sql, n_sql) -> windowed x.
-    Identical tree: same literals (two_pi = repr(2*math.pi)), same
-    Multiply/Subtract/Divide nesting, same CAST placement."""
-    if window_func in (None, "none", "None", "rect", "boxcar"):
-        return lambda x, i, n: x
-    from dabstract_spark.core import sql_double
-
     two_pi = sql_double(2.0 * math.pi)
 
     def w(i, n):
@@ -279,22 +242,6 @@ def _window_sql(window_func: str, periodic: bool):
     return lambda x, i, n: f"{x} * {w(i, n)}"
 
 
-def _bind_operand_sql(col_sql: str, body_fn) -> str:
-    """Multi-reference guard for SQL twins (r13, per ADVICE.md): a stage
-    whose SQL references its operand k times would copy the accumulated
-    prefix k times — after an unrolled-literal stage (Filterbank ~KBs)
-    the one-parse string grows multiplicatively per stage, unlike the
-    Column path where every reference shares one Java expression object.
-    Non-trivial operands are therefore bound ONCE as a lambda variable
-    (the core.bind_once element_at/transform/array spelling — value-
-    identical, evaluated once per row). Trivial operands (a quoted name
-    or short expression) keep splicing directly, so every currently
-    declared chain's plan stays byte-identical."""
-    if len(col_sql) <= 64:
-        return body_fn(f"({col_sql})")
-    return f"element_at(transform(array({col_sql}), __pc -> {body_fn('__pc')}), 1)"
-
-
 class Windowing(Processor):
     """Multiply an array by a window function (reference
     processors.py:264-293). Native: transform with (element, index)
@@ -306,15 +253,10 @@ class Windowing(Processor):
         # reference passes fftbins=symmetry to scipy.get_window: True → periodic
         self.periodic = bool(symmetry)
 
-    def expr(self, col, info):
-        wf = _window_expr(self.window_func, self.periodic)
-        n = F.size(col)
-        return F.transform(col, lambda x, i: wf(x, i, n)), {}
-
     def sql(self, col_sql, info):
-        wf = _window_sql(self.window_func, self.periodic)
+        wf = _window(self.window_func, self.periodic)
         return (
-            _bind_operand_sql(
+            _bind_operand(
                 col_sql,
                 lambda c: f"transform({c}, (__px, __pi) -> "
                 f"{wf('__px', '__pi', f'size({c})')})",
@@ -331,39 +273,21 @@ class ExpandDims(Processor):
         super().__init__(axis=axis)
         self.axis = axis
 
-    def expr(self, col, info):
-        if self.axis == 0:
-            return F.array(col), {}
-        return F.transform(col, lambda x: F.array(x)), {}
-
     def sql(self, col_sql, info):
+        upd = {"dtype": f"array<{info.get('dtype', 'double')}>"}
         if self.axis == 0:
-            return f"array({col_sql})", {}
-        return f"transform({col_sql}, __px -> array(__px))", {}
+            return f"array({col_sql})", upd
+        return f"transform({col_sql}, __px -> array(__px))", upd
 
 
-def _arr_mean(c: Column) -> Column:
-    return F.aggregate(
-        c, F.lit(0.0), lambda acc, x: acc + x.cast("double")
-    ) / F.size(c).cast("double")
-
-
-def _arr_moment(c: Column, mu: Column, p: int) -> Column:
-    return F.aggregate(
-        c, F.lit(0.0), lambda acc, x: acc + F.pow(x.cast("double") - mu, float(p))
-    ) / F.size(c).cast("double")
-
-
-def _arr_mean_sql(c: str) -> str:
+def _arr_mean(c: str) -> str:
     return (
         f"(aggregate({c}, 0.0D, (__pa, __px) -> __pa + CAST(__px AS DOUBLE))"
         f" / CAST(size({c}) AS DOUBLE))"
     )
 
 
-def _arr_moment_sql(c: str, mu: str, p: int) -> str:
-    from dabstract_spark.core import sql_double
-
+def _arr_moment(c: str, mu: str, p: int) -> str:
     return (
         f"(aggregate({c}, 0.0D, (__pa, __px) -> __pa +"
         f" pow(CAST(__px AS DOUBLE) - ({mu}), {sql_double(float(p))}))"
@@ -375,8 +299,8 @@ class Aggregation(Processor):
     """Per-row array statistics (reference processors.py:483-520):
     mean / std (population, np default) / kurtosis (Fisher, biased —
     scipy default). 1-D arrays → array of one scalar per method; 2-D
-    arrays with axis=0 → per-column stats (mean/std), combined per
-    ``combine`` ('concat' flattens). Pure HOF expressions."""
+    arrays with axis=0 → per-column stats, with axis=-1 → per-row stats,
+    combined per ``combine`` ('concat' flattens). Pure HOF expressions."""
 
     _METHODS = ("mean", "std", "kurtosis")
 
@@ -390,7 +314,7 @@ class Aggregation(Processor):
         self.axis = axis
         self.combine = combine
 
-    def _scalar_stats(self, c: Column, mu: Column) -> list[Column]:
+    def _scalar_stats(self, c: str, mu: str) -> list[str]:
         """Stats given an already-BOUND mean (a lambda variable, not the
         mean aggregate expression — capturing the aggregate inside the
         moment lambdas would re-evaluate it per array element, O(n²))."""
@@ -399,31 +323,14 @@ class Aggregation(Processor):
             if m == "mean":
                 out.append(mu)
             elif m == "std":
-                out.append(F.sqrt(_arr_moment(c, mu, 2)))
+                out.append(f"sqrt({_arr_moment(c, mu, 2)})")
             else:
                 # kurtosis: m4/m2^2 - 3; NULL for a constant array
                 # (m2 = 0 — undefined, and ANSI would raise
                 # DIVIDE_BY_ZERO; scipy emits nan there). Oracles carry
                 # the matching CASE WHEN m2 = 0 THEN NULL leg.
                 m2 = _arr_moment(c, mu, 2)
-                out.append(
-                    F.when(m2 == F.lit(0.0), F.lit(None).cast("double")).otherwise(
-                        _arr_moment(c, mu, 4) / F.pow(m2, 2.0) - 3.0
-                    )
-                )
-        return out
-
-    def _scalar_stats_sql(self, c: str, mu: str) -> list[str]:
-        """SQL twin of _scalar_stats (same bound-mean discipline)."""
-        out = []
-        for m in self.methods:
-            if m == "mean":
-                out.append(mu)
-            elif m == "std":
-                out.append(f"sqrt({_arr_moment_sql(c, mu, 2)})")
-            else:
-                m2 = _arr_moment_sql(c, mu, 2)
-                m4 = _arr_moment_sql(c, mu, 4)
+                m4 = _arr_moment(c, mu, 4)
                 out.append(
                     f"(CASE WHEN {m2} = 0.0D THEN CAST(NULL AS DOUBLE)"
                     f" ELSE {m4} / pow({m2}, 2.0D) - 3.0D END)"
@@ -435,28 +342,30 @@ class Aggregation(Processor):
         upd = {"time_step": 0} if self.axis == 0 else {}
         if not dt.startswith("array<array"):
             return (
-                _bind_operand_sql(
+                _bind_operand(
                     col_sql,
-                    lambda c: f"element_at(transform(array({_arr_mean_sql(c)}),"
+                    lambda c: f"element_at(transform(array({_arr_mean(c)}),"
                     f" __pm -> array("
-                    + ", ".join(self._scalar_stats_sql(c, "__pm"))
+                    + ", ".join(self._scalar_stats(c, "__pm"))
                     + ")), 1)",
                 ),
                 upd,
             )
         if self.axis in (1, -1):
-            stats = ", ".join(self._scalar_stats_sql("__pin", "__pm"))
-            per_row = _bind_operand_sql(
+            # 2-D, axis=-1: stats per ROW (over each inner array), like
+            # np.mean(data, axis=-1) — one stats array per frame
+            stats = ", ".join(self._scalar_stats("__pin", "__pm"))
+            per_row = _bind_operand(
                 col_sql,
                 lambda c: f"transform({c}, __pin ->"
-                f" element_at(transform(array({_arr_mean_sql('__pin')}),"
+                f" element_at(transform(array({_arr_mean('__pin')}),"
                 f" __pm -> array({stats})), 1))",
             )
             if self.combine == "concat":
                 return f"flatten({per_row})", upd
             return per_row, upd
 
-        # 2-D, axis=0: per-column stats, same shapes as the Column form
+        # 2-D, axis=0: stats per column j across the rows
         def _axis0(c):
             n_rows = f"CAST(size({c}) AS DOUBLE)"
             width = f"size(element_at({c}, 1))"
@@ -468,8 +377,6 @@ class Aggregation(Processor):
                 )
 
             def col_moment(j, mu, p):
-                from dabstract_spark.core import sql_double
-
                 return (
                     f"(aggregate({c}, 0.0D, (__pa, __pr) -> __pa +"
                     f" pow(CAST(element_at(__pr, {j}) AS DOUBLE) - ({mu}),"
@@ -499,70 +406,7 @@ class Aggregation(Processor):
                 return f"flatten(array({', '.join(per_method)}))"
             return f"array({', '.join(per_method)})"
 
-        return _bind_operand_sql(col_sql, _axis0), upd
-
-    def expr(self, col, info):
-        from dabstract_spark.core import bind_once
-
-        dt = str(info.get("dtype", "array<double>"))
-        upd = {"time_step": 0} if self.axis == 0 else {}
-        if not dt.startswith("array<array"):
-            return (
-                bind_once(
-                    _arr_mean(col), lambda mu: F.array(*self._scalar_stats(col, mu))
-                ),
-                upd,
-            )
-        if self.axis in (1, -1):
-            # 2-D, axis=-1: stats per ROW (over each inner array), like
-            # np.mean(data, axis=-1) — one stats array per frame
-            per_row = F.transform(
-                col,
-                lambda inner: bind_once(
-                    _arr_mean(inner),
-                    lambda mu: F.array(*self._scalar_stats(inner, mu)),
-                ),
-            )
-            if self.combine == "concat":
-                return F.flatten(per_row), upd
-            return per_row, upd
-        # 2-D, axis=0: stats per column j across the rows
-        n_rows = F.size(col).cast("double")
-        width = F.size(F.element_at(col, 1))
-        js = F.sequence(F.lit(1), width)
-
-        def col_mean(j):
-            return (
-                F.aggregate(col, F.lit(0.0), lambda acc, r: acc + F.element_at(r, j).cast("double"))
-                / n_rows
-            )
-
-        def col_moment(j, mu, p):
-            return (
-                F.aggregate(
-                    col,
-                    F.lit(0.0),
-                    lambda acc, r: acc + F.pow(F.element_at(r, j).cast("double") - mu, float(p)),
-                )
-                / n_rows
-            )
-
-        def col_std(j):
-            return bind_once(col_mean(j), lambda mu: F.sqrt(col_moment(j, mu, 2)))
-
-        def col_kurt(j):
-            return bind_once(
-                col_mean(j),
-                lambda mu: col_moment(j, mu, 4) / F.pow(col_moment(j, mu, 2), 2.0) - 3.0,
-            )
-
-        per_method = []
-        for m in self.methods:
-            fn = {"mean": col_mean, "std": col_std, "kurtosis": col_kurt}[m]
-            per_method.append(F.transform(js, fn))
-        if self.combine == "concat":
-            return F.flatten(F.array(*per_method)), upd
-        return F.array(*per_method), upd
+        return _bind_operand(col_sql, _axis0), upd
 
 
 class Normalizer(Processor):
@@ -648,58 +492,50 @@ class Normalizer(Processor):
             }
 
     # -- transform ----------------------------------------------------- #
-    def _require_fit(self):
+    def _minmax(self, j):
+        """SQL literals (min, scale, hi - lo, lo) of column j's minmax map."""
+        lo, hi = self.feature_range
+        mn, mx = self.fitted["min"][j], self.fitted["max"][j]
+        return tuple(sql_double(v) for v in (mn, (mx - mn) or 1.0, hi - lo, lo))
+
+    def _standard(self, j):
+        """SQL literals (mean, std) of column j's standard map."""
+        return sql_double(self.fitted["mean"][j]), sql_double(self.fitted["std"][j])
+
+    def _fwd1(self, x, j):
+        x = f"CAST({x} AS DOUBLE)"
+        if self.type == "minmax":
+            mn, scale, span, lo = self._minmax(j)
+            return f"({x} - {mn}) / {scale} * {span} + {lo}"
+        mu, sd = self._standard(j)
+        return f"({x} - {mu}) / {sd}"
+
+    def _bwd1(self, x, j):
+        x = f"CAST({x} AS DOUBLE)"
+        if self.type == "minmax":
+            mn, scale, span, lo = self._minmax(j)
+            return f"({x} - {lo}) / {span} * {scale} + {mn}"
+        mu, sd = self._standard(j)
+        return f"{x} * {sd} + {mu}"
+
+    def _apply(self, col_sql, info, f1):
         if self.fitted is None:
             raise RuntimeError("Normalizer.fit must run before process (reference parity)")
+        n = len(self.fitted.get("min", self.fitted.get("mean", [0])))
+        if n > 1 and str(info.get("dtype", "")).startswith("array<array"):
+            # per-column params dispatched on the runtime column index:
+            # a CASE over the (small) fitted vector
+            pick = f1("__px", 0)
+            for j in range(1, n):
+                pick = f"CASE WHEN __pi = {j} THEN {f1('__px', j)} ELSE {pick} END"
+            return f"transform({col_sql}, __pr -> transform(__pr, (__px, __pi) -> {pick}))"
+        return _elementwise(col_sql, lambda x: f1(x, 0), info)
 
-    def _fwd1(self, x, j=0):
-        lo, hi = self.feature_range
-        if self.type == "minmax":
-            mn, mx = self.fitted["min"][j], self.fitted["max"][j]
-            scale = (mx - mn) or 1.0
-            return (x.cast("double") - F.lit(mn)) / F.lit(scale) * F.lit(hi - lo) + F.lit(lo)
-        mu, sd = self.fitted["mean"][j], self.fitted["std"][j]
-        return (x.cast("double") - F.lit(mu)) / F.lit(sd)
+    def sql(self, col_sql, info):
+        return self._apply(col_sql, info, self._fwd1), {}
 
-    def _bwd1(self, x, j=0):
-        lo, hi = self.feature_range
-        if self.type == "minmax":
-            mn, mx = self.fitted["min"][j], self.fitted["max"][j]
-            scale = (mx - mn) or 1.0
-            return (x.cast("double") - F.lit(lo)) / F.lit(hi - lo) * F.lit(scale) + F.lit(mn)
-        mu, sd = self.fitted["mean"][j], self.fitted["std"][j]
-        return x.cast("double") * F.lit(sd) + F.lit(mu)
-
-    def _apply(self, col, info, f1):
-        self._require_fit()
-        dt = str(info.get("dtype", ""))
-        per_col = len(self.fitted.get("min", self.fitted.get("mean", [0]))) > 1
-        if dt.startswith("array<array"):
-            if per_col:
-                return F.transform(
-                    col,
-                    lambda row: F.transform(row, lambda x, i: _pick(f1, x, i, self.fitted)),
-                )
-            return F.transform(col, lambda row: F.transform(row, lambda x: f1(x, 0)))
-        if dt.startswith("array"):
-            return F.transform(col, lambda x: f1(x, 0))
-        return f1(col, 0)
-
-    def expr(self, col, info):
-        return self._apply(col, info, self._fwd1), {}
-
-    def inv_expr(self, col, info):
-        return self._apply(col, info, self._bwd1)
-
-
-def _pick(f1, x, i, fitted):
-    """Dispatch per-column fitted params on a runtime index: build a CASE
-    over the (small) fitted vector."""
-    n = len(next(iter(fitted.values())))
-    out = f1(x, 0)
-    for j in range(1, n):
-        out = F.when(i == j, f1(x, j)).otherwise(out)
-    return out
+    def inv_sql(self, col_sql, info):
+        return self._apply(col_sql, info, self._bwd1)
 
 
 class Framing(Processor):
@@ -725,29 +561,6 @@ class Framing(Processor):
         self.window_func = window_func
         self.fs = fs
 
-    def expr(self, col, info):
-        fs = info.get("fs", self.fs)
-        if fs is None and info.get("time_step"):
-            fs = 1.0 / info["time_step"]
-        if fs is None:
-            raise ValueError("fs not provided in Framing (init, info, or chain)")
-        frame_len = int(round(self.windowsize * fs))
-        step = 1 if self.stepsize is None else int(round(self.stepsize * fs))
-        n = F.size(col)
-        n_frames = (F.floor((n - frame_len) / step) + 1).cast("int")
-        idx = F.when(n_frames > 0, F.sequence(F.lit(0), n_frames - 1)).otherwise(
-            F.array().cast("array<int>")
-        )
-        wf = _window_expr(self.window_func, periodic=True)
-        frames = F.transform(
-            idx,
-            lambda i: F.transform(
-                F.slice(col, i * step + 1, frame_len),
-                lambda x, k: wf(x.cast("double"), k, F.lit(frame_len)),
-            ),
-        )
-        return frames, ({"time_step": self.stepsize} if self.stepsize else {})
-
     def sql(self, col_sql, info):
         fs = info.get("fs", self.fs)
         if fs is None and info.get("time_step"):
@@ -756,7 +569,7 @@ class Framing(Processor):
             raise ValueError("fs not provided in Framing (init, info, or chain)")
         frame_len = int(round(self.windowsize * fs))
         step = 1 if self.stepsize is None else int(round(self.stepsize * fs))
-        wf = _window_sql(self.window_func, periodic=True)
+        wf = _window(self.window_func, periodic=True)
         body = wf("CAST(__px AS DOUBLE)", "__pk", str(frame_len))
 
         def _frames(c):
@@ -771,8 +584,10 @@ class Framing(Processor):
                 f" (__px, __pk) -> {body}))"
             )
 
-        frames = _bind_operand_sql(col_sql, _frames)
-        return frames, ({"time_step": self.stepsize} if self.stepsize else {})
+        upd = {"dtype": "array<array<double>>"}
+        if self.stepsize:
+            upd["time_step"] = self.stepsize
+        return _bind_operand(col_sql, _frames), upd
 
 
 # --------------------------------------------------------------------- #
@@ -847,7 +662,7 @@ class FFT(Processor):
                     out[i] = y[row]
             return pd.Series(out)
 
-        upd = {}
+        upd = {"dtype": "array<double>"}
         n_in = info.get("n_samples")
         if n_in:
             upd["nfft"] = self._nfft_for(int(n_in))
@@ -905,9 +720,10 @@ class Filterbank(Processor):
     Triangular mel/linear filters are sparse — each frequency bin feeds
     at most two overlapping bands — so when the matrix has few nonzeros
     the matmul unrolls into pure JVM expressions (one literal-weighted
-    sum per band over the lambda-bound input; zeros skipped). Dense /
-    very large banks fall back to an Arrow pandas UDF. Zero outputs are
-    eps-floored like the reference."""
+    sum per band over the lambda-bound input; zeros skipped), parsed
+    once: q91's plan build was ~1.6k py4j round trips as a Column tree,
+    ~10 as one parse. Dense / very large banks fall back to an Arrow
+    pandas UDF. Zero outputs are eps-floored like the reference."""
 
     #: beyond this many nonzero coefficients the unrolled expression
     #: tree stops being worth it; fall back to the Arrow UDF matmul
@@ -934,7 +750,8 @@ class Filterbank(Processor):
         self.norm = norm
         self.fs = fs
 
-    def expr(self, col, info):
+    def _matrix(self, info) -> np.ndarray:
+        """The (nfft//2+1, n_bands) bank for this chain position."""
         fs = info.get("fs", self.fs)
         if fs is None:
             raise ValueError("no fs given in Filterbank (init or chain info)")
@@ -947,62 +764,17 @@ class Filterbank(Processor):
                 " (reference processors.py:387-394 asserts the same at process time;"
                 " here it fails at plan-build)"
             )
-        fb = mel_filterbank(
-            self.n_bands, int(nfft), float(fs), self.fmin, self.fmax, self.scale, self.norm
-        ).T  # (nfft//2+1, n_bands)
-        eps = float(np.finfo(float).eps)
-
-        if int(np.count_nonzero(fb)) <= self.MAX_NATIVE_NNZ:
-            from dabstract_spark.core import bind_once
-
-            band_terms = [
-                [(j, float(fb[j, b])) for j in range(fb.shape[0]) if fb[j, b] != 0.0]
-                for b in range(self.n_bands)
-            ]
-
-            def apply(x):
-                outs = []
-                for terms in band_terms:
-                    acc = F.lit(0.0)
-                    for j, c in terms:  # ascending j: left-assoc fold, same
-                        acc = acc + F.lit(c) * F.element_at(x, j + 1)  # order as SQL
-                    outs.append(F.when(acc == 0.0, F.lit(eps)).otherwise(acc))
-                return F.array(*outs)
-
-            return bind_once(col, apply), {"n_samples": self.n_bands}
-
-        @pandas_udf("array<double>")
-        def fbank_udf(s):
-            import pandas as pd
-
-            mat = np.stack([np.asarray(x, dtype=np.float64) for x in s]) if len(s) else np.zeros((0, fb.shape[0]))
-            out = mat @ fb
-            out = np.where(out == 0, eps, out)
-            return pd.Series(list(out))
-
-        return fbank_udf(col), {"n_samples": self.n_bands}
-
-    def sql(self, col_sql, info):
-        """One-parse twin of the sparse-unrolled native path: the same
-        left-associative literal-weighted sums (ascending j), the same
-        eps-floor CASE, the same bind-once-through-array. The measured
-        win: q91's plan build was ~1.6k py4j round trips Column-wise,
-        ~10 with the single parse. Dense banks (the Arrow-UDF fallback)
-        return None — a Python stage has no SQL form."""
-        fs = info.get("fs", self.fs)
-        nfft = info.get("nfft", self.nfft)
-        if fs is None or nfft is None:
-            # same contract failures as expr(); raise there, not here
-            return None
-        if self.nfft is not None and "nfft" in info and info["nfft"] != self.nfft:
-            return None  # expr() raises the detailed mismatch error
-        fb = mel_filterbank(
+        return mel_filterbank(
             self.n_bands, int(nfft), float(fs), self.fmin, self.fmax, self.scale, self.norm
         ).T
+
+    def sql(self, col_sql, info):
+        """Left-associative literal-weighted sums (ascending j) with the
+        eps-floor CASE, over the operand bound once; None past
+        MAX_NATIVE_NNZ (the Arrow UDF in expr)."""
+        fb = self._matrix(info)
         if int(np.count_nonzero(fb)) > self.MAX_NATIVE_NNZ:
             return None
-        from dabstract_spark.core import sql_double
-
         eps = sql_double(float(np.finfo(float).eps))
         bands = []
         for b in range(self.n_bands):
@@ -1015,8 +787,24 @@ class Filterbank(Processor):
         return (
             f"element_at(transform(array({col_sql}),"
             f" __pc -> array({', '.join(bands)})), 1)",
-            {"n_samples": self.n_bands},
+            {"n_samples": self.n_bands, "dtype": "array<double>"},
         )
+
+    def expr(self, col, info):
+        """The Arrow-UDF matmul, for banks past MAX_NATIVE_NNZ."""
+        fb = self._matrix(info)
+        eps = float(np.finfo(float).eps)
+
+        @pandas_udf("array<double>")
+        def fbank_udf(s):
+            import pandas as pd
+
+            mat = np.stack([np.asarray(x, dtype=np.float64) for x in s]) if len(s) else np.zeros((0, fb.shape[0]))
+            out = mat @ fb
+            out = np.where(out == 0, eps, out)
+            return pd.Series(list(out))
+
+        return fbank_udf(col), {"n_samples": self.n_bands, "dtype": "array<double>"}
 
 
 def firwin(
@@ -1083,38 +871,45 @@ class FIRFilter(Processor):
         pass_zero = self.type in ("lowpass", "bandstop")
         return firwin(self.taps, self.f, self.window, fs=fs, pass_zero=pass_zero)
 
-    def expr(self, col, info):
+    def _coefficients(self, info) -> np.ndarray:
         fs = info.get("fs", self.fs)
         if fs is None:
             raise ValueError("sampling frequency must reach FIRFilter (init or chain info)")
-        h = self.coefficients(float(fs))
+        return self.coefficients(float(fs))
 
-        if self.taps <= self.MAX_NATIVE_TAPS:
-            taps = [float(v) for v in h]
+    def sql(self, col_sql, info):
+        """y[i] = sum_k h[k] * x[i-k], accumulated in ascending-k order
+        (matches DuckDB list_sum fold order bit for bit); None past
+        MAX_NATIVE_TAPS (the Arrow UDF in expr)."""
+        h = self._coefficients(info)
+        if self.taps > self.MAX_NATIVE_TAPS:
+            return None
+        acc = "0.0D"
+        for k, hk in enumerate((float(v) for v in h), start=1):
+            acc += (
+                f" + (CASE WHEN __pi - {k} + 1 >= 1 THEN"
+                f" {sql_double(hk)} * element_at(__pa, __pi - {k} + 1)"
+                f" ELSE 0.0D END)"
+            )
+        # sequence(1, 0) DESCENDS to [1, 0] — empty inputs must map to
+        # empty outputs (like np.convolve), not two spurious rows / an
+        # out-of-bounds element_at
+        conv = (
+            f"(CASE WHEN size(__pa) > 0 THEN"
+            f" transform(sequence(1, size(__pa)), __pi -> {acc})"
+            f" ELSE CAST(array() AS ARRAY<DOUBLE>) END)"
+        )
+        # the operand is bound ONCE as __pa: element_at over a lambda
+        # variable is O(1), over an inlined expression it re-evaluates
+        # the expression per (i, k) term
+        return (
+            f"element_at(transform(array({col_sql}), __pa -> {conv}), 1)",
+            {"dtype": "array<double>"},
+        )
 
-            def conv(x):
-                # y[i] = sum_k h[k] * x[i-k], accumulated in ascending-k
-                # order (matches DuckDB list_sum fold order bit for bit)
-                def y(i):
-                    acc = F.lit(0.0)
-                    for k, hk in enumerate(taps, start=1):
-                        acc = acc + F.when(
-                            i - k + 1 >= 1, F.lit(hk) * F.element_at(x, i - k + 1)
-                        ).otherwise(F.lit(0.0))
-                    return acc
-
-                # sequence(1, 0) DESCENDS to [1, 0] — empty inputs must
-                # map to empty outputs (like np.convolve), not two
-                # spurious rows / an out-of-bounds element_at
-                return F.when(
-                    F.size(x) > 0, F.transform(F.sequence(F.lit(1), F.size(x)), y)
-                ).otherwise(F.array().cast("array<double>"))
-
-            # bind the (possibly composed) input expression ONCE via a
-            # lambda variable: element_at over a lambda var is O(1), while
-            # element_at over an inlined expression re-evaluates it per
-            # (i, k) term — the pushdown/inline O(n^2) trap
-            return F.element_at(F.transform(F.array(col), conv), 1), {}
+    def expr(self, col, info):
+        """The Arrow-UDF convolution, for filters past MAX_NATIVE_TAPS."""
+        h = self._coefficients(info)
 
         @pandas_udf("array<double>")
         def fir_udf(s):
@@ -1123,39 +918,12 @@ class FIRFilter(Processor):
             out = []
             for x in s:
                 arr = np.asarray(x, dtype=np.float64)
-                out.append(np.convolve(arr, h, mode="full")[: arr.shape[0]])
+                # np.convolve rejects an empty input; empty maps to empty
+                # like the native path
+                out.append(np.convolve(arr, h, mode="full")[: arr.shape[0]] if arr.size else arr)
             return pd.Series(out)
 
-        return fir_udf(col), {}
-
-    def sql(self, col_sql, info):
-        """One-parse twin of the unrolled causal convolution (same
-        ascending-k fold, same boundary CASE, same bind-once). Long
-        filters (Arrow-UDF fallback) return None."""
-        fs = info.get("fs", self.fs)
-        if fs is None:
-            return None  # expr() raises the contract error
-        if self.taps > self.MAX_NATIVE_TAPS:
-            return None
-        from dabstract_spark.core import sql_double
-
-        h = self.coefficients(float(fs))
-        acc = "0.0D"
-        for k, hk in enumerate((float(v) for v in h), start=1):
-            acc += (
-                f" + (CASE WHEN __pi - {k} + 1 >= 1 THEN"
-                f" {sql_double(hk)} * element_at(__pa, __pi - {k} + 1)"
-                f" ELSE 0.0D END)"
-            )
-        conv = (
-            f"(CASE WHEN size(__pa) > 0 THEN"
-            f" transform(sequence(1, size(__pa)), __pi -> {acc})"
-            f" ELSE CAST(array() AS ARRAY<DOUBLE>) END)"
-        )
-        return (
-            f"element_at(transform(array({col_sql}), __pa -> {conv}), 1)",
-            {},
-        )
+        return fir_udf(col), {"dtype": "array<double>"}
 
 
 class Resample(Processor):
@@ -1202,6 +970,7 @@ class Resample(Processor):
         return resample_udf(col), {
             "fs": self.target_fs,
             "time_step": 1.0 / self.target_fs,
+            "dtype": "array<double>",
         }
 
 

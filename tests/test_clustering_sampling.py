@@ -1250,11 +1250,26 @@ def test_cc_local_fastpath_matches_distributed(spark):
     """The r13 single-task union-find fast path must produce exactly the
     distributed propagation loop's labels (min member id per component,
     singletons attached) on random graphs — including parallel edges,
-    self-loops, and isolated nodes."""
+    self-loops, and isolated nodes — and on NULL endpoints (no edge on
+    either path; Arrow would hand the union-find a NaN id) and int/bigint
+    endpoints (labeled in their common type: ids past the int range on
+    the dst side must survive)."""
     import os
     import random
 
     from dabstract_spark.operators.dedup import connected_components
+
+    def both_paths(nodes, edges):
+        fast = connected_components(nodes, edges)
+        os.environ["SPARK_GRAFT_CC_LOCAL_MAX"] = "0"
+        try:
+            slow = connected_components(nodes, edges)
+            slow_rows = sorted(tuple(r) for r in slow.collect())
+        finally:
+            del os.environ["SPARK_GRAFT_CC_LOCAL_MAX"]
+        assert fast.dtypes == slow.dtypes
+        assert sorted(tuple(r) for r in fast.collect()) == slow_rows
+        return slow_rows
 
     rng = random.Random(5)
     for _ in range(3):
@@ -1265,17 +1280,15 @@ def test_cc_local_fastpath_matches_distributed(spark):
         ]
         nodes = spark.range(0, n + 1).selectExpr("id")
         edges = spark.createDataFrame(edges_py, "id_a bigint, id_b bigint")
-        fast = sorted(
-            (r["id"], r["cluster_id"])
-            for r in connected_components(nodes, edges).collect()
-        )
-        os.environ["SPARK_GRAFT_CC_LOCAL_MAX"] = "0"
-        try:
-            slow = sorted(
-                (r["id"], r["cluster_id"])
-                for r in connected_components(nodes, edges).collect()
-            )
-        finally:
-            del os.environ["SPARK_GRAFT_CC_LOCAL_MAX"]
-        assert fast == slow
-        assert len(fast) == n + 1  # every node labeled exactly once
+        assert len(both_paths(nodes, edges)) == n + 1  # every node labeled exactly once
+
+    big = 2**40
+    with_nulls = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 5), (6, 7), (None, None), (3, 3)],
+        "id_a bigint, id_b bigint",
+    )
+    labels = both_paths(spark.range(0, 8).selectExpr("id"), with_nulls)
+    assert [r[0] for r in labels] == list(range(8))
+    mixed = spark.createDataFrame([(1, 2), (2, big), (6, big + 1)], "id_a int, id_b bigint")
+    nodes = spark.range(0, 8).union(spark.createDataFrame([(big,), (big + 1,)], "id bigint"))
+    assert (big, 1) in both_paths(nodes, mixed)

@@ -1,38 +1,59 @@
-"""COVERAGE.md is the judge-facing operator->evidence matrix; its
-file:line anchors must not drift as code moves. Every `path:line` (and
-`path:l1,l2,...`) reference must land on or near a def/class line, and
-every query id it cites must exist in the catalog."""
+"""COVERAGE.md is the judge-facing operator->evidence matrix; its code
+anchors must not drift as code moves. Anchors name a definition by
+symbol — `dabstract_spark/<path>.py::<Qualified.name>` — and every one
+must resolve to a def/class in that file (through ``ast``, so moving
+lines can never break it). Line-number anchors (`path.py:123`, short
+forms like `processing/processors.py:123`, and bare `:123`
+continuations) drift silently and are refused. Every query id the
+matrix cites must exist in the catalog."""
 
 from __future__ import annotations
 
+import ast
 import re
+from functools import lru_cache
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-ANCHOR = re.compile(r"`(dabstract_spark/[\w/]+\.py):(\d+(?:,\d+)*)`")
+SYMBOL = re.compile(r"`(dabstract_spark/[\w/]+\.py)::([\w.]+)`")
+LINE_NUMBER = re.compile(r"`(?:[\w/]+\.py)?:\d+(?:,\s*\d+)*`")
 QID = re.compile(r"\bq\d{2}[a-z0-9_]*")
 
 
-def _is_anchor_line(line: str) -> bool:
-    s = line.strip()
-    return (
-        s.startswith(("def ", "class ", "@", "#:"))
-        or s.startswith("MAX_")
-        or bool(re.match(r"^[A-Z_]+\s*=", s))
-    )
+@lru_cache(maxsize=None)
+def _definitions(path: str) -> frozenset[str]:
+    """Qualified names of every def/class in ``path`` (Class.method)."""
+    out = set()
+
+    def walk(node, prefix):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                name = prefix + child.name
+                out.add(name)
+                walk(child, name + ".")
+
+    walk(ast.parse((REPO / path).read_text()), "")
+    return frozenset(out)
 
 
-def test_coverage_file_line_anchors_point_at_definitions():
+def test_coverage_symbol_anchors_resolve_to_definitions():
     text = (REPO / "COVERAGE.md").read_text()
-    bad = []
-    for m in ANCHOR.finditer(text):
-        path, lines_spec = m.group(1), m.group(2)
-        src = (REPO / path).read_text().splitlines()
-        for ln in map(int, lines_spec.split(",")):
-            window = src[max(0, ln - 2) : ln + 1]  # anchor or +-1 line
-            if not any(_is_anchor_line(w) for w in window):
-                bad.append(f"{path}:{ln} -> {src[ln - 1].strip()[:60]!r}")
-    assert not bad, "drifted COVERAGE.md anchors:\n" + "\n".join(bad)
+    anchors = SYMBOL.findall(text)
+    assert anchors, "COVERAGE.md has no symbol anchors — did the format change?"
+    bad = [
+        f"{path}::{sym}"
+        for path, sym in anchors
+        if not (REPO / path).is_file() or sym not in _definitions(path)
+    ]
+    assert not bad, "COVERAGE.md anchors naming no definition:\n" + "\n".join(bad)
+
+
+def test_coverage_has_no_line_number_anchors():
+    text = (REPO / "COVERAGE.md").read_text()
+    stale = sorted(set(LINE_NUMBER.findall(text)))
+    assert not stale, (
+        "line-number anchors drift as code moves; use `path.py::Symbol`: " + ", ".join(stale)
+    )
 
 
 def test_coverage_query_ids_exist_in_catalog():

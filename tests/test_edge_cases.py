@@ -395,3 +395,27 @@ def test_funnel_cap_truncation_is_observable(spark):
 
     with pytest.raises(ValueError):
         funnel_stages(df, max_events=None, truncated_col="capped")
+
+
+def test_loop_actions_restores_unset_conf_by_unsetting(spark):
+    """A conf that was unset before a fixed-point loop is unset again
+    after it (not pinned to its read-back default), and a set conf gets
+    its own value back."""
+    from dabstract_spark.core import loop_actions
+
+    sp, aqe = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    saved = {k: spark.conf.get(k, None) for k in (sp, aqe)}
+    try:
+        spark.conf.unset(sp)
+        spark.conf.set(aqe, "true")
+        with loop_actions(spark):
+            assert spark.conf.get(sp, None) is not None
+            assert spark.conf.get(aqe) == "false"
+        assert spark.conf.get(sp, None) is None
+        assert spark.conf.get(aqe) == "true"
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

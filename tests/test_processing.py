@@ -295,16 +295,19 @@ def test_filterbank_native_matches_udf_fallback(spark, monkeypatch):
     np.testing.assert_allclose(native[0], udf[0], rtol=1e-10)
 
 
-def test_fir_empty_and_short_arrays(spark):
-    """Empty input -> empty output (np.convolve parity), short input ->
-    same length out; the sequence(1, 0) descending trap must not emit
-    spurious elements."""
+def test_fir_empty_and_short_arrays(spark, monkeypatch):
+    """Empty input -> empty output, short input -> same length out, on
+    both the unrolled native path (the sequence(1, 0) descending trap
+    must not emit spurious elements) and the Arrow fallback (np.convolve
+    rejects an empty input)."""
     fir = FIRFilter(type="lowpass", f=1000.0, taps=9, fs=8000.0)
-    got = _apply(spark, fir, [[], [1.0, 2.0]], info={"fs": 8000.0})
-    assert got[0] == []
-    assert len(got[1]) == 2
     h = fir.coefficients(8000.0)
-    np.testing.assert_allclose(got[1], np.convolve([1.0, 2.0], h)[:2], rtol=1e-12)
+    for max_native_taps in (FIRFilter.MAX_NATIVE_TAPS, 0):
+        monkeypatch.setattr(FIRFilter, "MAX_NATIVE_TAPS", max_native_taps)
+        got = _apply(spark, fir, [[], [1.0, 2.0]], info={"fs": 8000.0})
+        assert got[0] == []
+        assert len(got[1]) == 2
+        np.testing.assert_allclose(got[1], np.convolve([1.0, 2.0], h)[:2], rtol=1e-12)
 
 
 def test_aggregation_2d_kurtosis_matches_numpy(spark):
@@ -344,68 +347,236 @@ def test_aggregation_2d_axis_minus1_per_row(spark):
 
 
 # --------------------------------------------------------------------- #
-# SQL-twin equality (optimization r12): every Processor.sql() must build
-# the same expression tree as its expr() — pinned by exact result
-# equality (repr captures float bits) on ragged/edge inputs. The string
-# input engages the one-parse SQL path; the Column input forces the
-# Column path.
+# Native chains against numpy on edge inputs: ragged lengths, all zeros
+# (Filterbank's eps-floor leg, log of 0 -> NULL), a constant array
+# (kurtosis NULL leg), negatives (log domain -> NULL), and an empty
+# array (FIR / Framing boundary). Aggregation and Filterbank are defined
+# on the fixed 64-sample width only (ANSI raises on 0/0 and on an
+# out-of-range element_at), so they get the non-empty 64-wide rows.
 # --------------------------------------------------------------------- #
-_TWIN_CHAINS = {
-    "scaler_uint16": [("Scaler", {"type": "uint16"})],
-    "scaler_wav": [("Scaler", {"type": "wav_2_01"})],
-    "log_base10": [("Logarithm", {"type": "base10"})],
-    "log_natural": [("Logarithm", {"type": "natural"})],
-    "window_hamming": [("Windowing", {"window_func": "hamming"})],
-    "window_hann_sym": [("Windowing", {"window_func": "hann", "symmetry": False})],
-    "window_blackman": [("Windowing", {"window_func": "blackman"})],
-    "expand_rows": [("ExpandDims", {"axis": 0})],
-    "expand_cols": [("ExpandDims", {"axis": -1})],
-    "agg_1d": [("Aggregation", {"methods": ["mean", "std", "kurtosis"]})],
-    "framing": [("Framing", {"windowsize": 0.002, "stepsize": 0.001, "fs": 8000.0})],
-    "framing_agg_axis0": [
-        ("Framing", {"windowsize": 0.002, "stepsize": 0.001, "fs": 8000.0}),
-        ("Aggregation", {"methods": ["mean", "std"], "axis": 0, "combine": "concat"}),
-    ],
-    "framing_agg_rows": [
-        ("Framing", {"windowsize": 0.002, "stepsize": 0.001, "fs": 8000.0}),
-        ("Aggregation", {"methods": ["mean", "std", "kurtosis"], "axis": -1}),
-    ],
-    "filterbank": [("Filterbank", {"n_bands": 8, "scale": "mel", "nfft": 126, "fs": 8000.0})],
-    "fir_lowpass": [("FIRFilter", {"type": "lowpass", "f": 1000.0, "taps": 15, "fs": 8000.0})],
-    "fir_bandpass": [
-        ("FIRFilter", {"type": "bandpass", "f": [500.0, 1500.0], "taps": 21, "fs": 8000.0})
-    ],
-    "mixed_scalar_chain": [
-        ("Scaler", {"type": "wav_2_01"}),
-        ("Logarithm", {"type": "base10"}),
-        ("ExpandDims", {"axis": 0}),
-    ],
+_EDGE = {
+    "ramp": [float(i) / 7.0 - 0.4 for i in range(64)],
+    "zeros": [0.0] * 64,
+    "const": [1.5] * 64,
+    "negatives": [-1.0, 2.0, -3.0, 4.0] * 16,
+    "ragged": [math.sin(0.3 * i) for i in range(37)],
+    "empty": [],
 }
+_WIDE = ("ramp", "zeros", "const", "negatives")
+_FS = 8000.0
 
 
-@pytest.mark.parametrize("name", sorted(_TWIN_CHAINS))
-def test_sql_twin_matches_column_path(spark, name):
+def _elementwise_ref(f):
+    return lambda x: [f(v) for v in x]
+
+
+def _log_ref(f):
+    # Spark's log10/ln are NULL on non-positive input
+    return _elementwise_ref(lambda v: f(v) if v > 0 else None)
+
+
+def _window_ref(kind, periodic=True):
+    return lambda x: list(np.asarray(x) * window_values(kind, len(x), periodic))
+
+
+def _moments(x):
+    x = np.asarray(x)
+    mu = x.mean()
+    m2 = ((x - mu) ** 2).mean()
+    m4 = ((x - mu) ** 4).mean()
+    return mu, math.sqrt(m2), (None if m2 == 0 else m4 / m2**2 - 3.0)
+
+
+def _frames_ref(x, flen=16, step=8):
+    n = (len(x) - flen) // step + 1
+    w = window_values("hamming", flen, periodic=True)
+    return [list(np.asarray(x[f * step : f * step + flen]) * w) for f in range(max(n, 0))]
+
+
+def _fbank_ref(x):
+    fb = mel_filterbank(8, 126, _FS, scale="mel")
+    out = np.asarray(x) @ fb.T
+    return list(np.where(out == 0, np.finfo(float).eps, out))
+
+
+def _fir_ref(ftype, f, taps):
+    h = FIRFilter(type=ftype, f=f, taps=taps, fs=_FS).coefficients(_FS)
+    return lambda x: list(np.convolve(x, h)[: len(x)]) if x else []
+
+
+_FRAMING = ("Framing", {"windowsize": 0.002, "stepsize": 0.001, "fs": _FS})
+_NATIVE_CHAINS = {
+    "scaler_uint16": ([("Scaler", {"type": "uint16"})], _elementwise_ref(lambda v: v / 2**16)),
+    "scaler_wav": ([("Scaler", {"type": "wav_2_01"})], _elementwise_ref(lambda v: (v + 1) / 2)),
+    "log_base10": ([("Logarithm", {"type": "base10"})], _log_ref(lambda v: 20 * math.log10(v))),
+    "log_natural": ([("Logarithm", {"type": "natural"})], _log_ref(math.log)),
+    "window_hamming": ([("Windowing", {"window_func": "hamming"})], _window_ref("hamming")),
+    "window_hann_sym": (
+        [("Windowing", {"window_func": "hann", "symmetry": False})],
+        _window_ref("hann", periodic=False),
+    ),
+    "window_blackman": ([("Windowing", {"window_func": "blackman"})], _window_ref("blackman")),
+    "expand_rows": ([("ExpandDims", {"axis": 0})], lambda x: [x]),
+    "expand_cols": ([("ExpandDims", {"axis": -1})], lambda x: [[v] for v in x]),
+    "agg_1d": (
+        [("Aggregation", {"methods": ["mean", "std", "kurtosis"]})],
+        lambda x: list(_moments(x)),
+    ),
+    "framing": ([_FRAMING], _frames_ref),
+    "framing_agg_axis0": (
+        [_FRAMING, ("Aggregation", {"methods": ["mean", "std"], "axis": 0, "combine": "concat"})],
+        lambda x: list(
+            np.concatenate([np.mean(_frames_ref(x), axis=0), np.std(_frames_ref(x), axis=0)])
+        ),
+    ),
+    "framing_agg_rows": (
+        [_FRAMING, ("Aggregation", {"methods": ["mean", "std", "kurtosis"], "axis": -1})],
+        lambda x: [list(_moments(fr)) for fr in _frames_ref(x)],
+    ),
+    "filterbank": (
+        [("Filterbank", {"n_bands": 8, "scale": "mel", "nfft": 126, "fs": _FS})],
+        _fbank_ref,
+    ),
+    "fir_lowpass": (
+        [("FIRFilter", {"type": "lowpass", "f": 1000.0, "taps": 15, "fs": _FS})],
+        _fir_ref("lowpass", 1000.0, 15),
+    ),
+    "fir_bandpass": (
+        [("FIRFilter", {"type": "bandpass", "f": [500.0, 1500.0], "taps": 21, "fs": _FS})],
+        _fir_ref("bandpass", [500.0, 1500.0], 21),
+    ),
+    "mixed_scalar_chain": (
+        [
+            ("Scaler", {"type": "wav_2_01"}),
+            ("Logarithm", {"type": "base10"}),
+            ("ExpandDims", {"axis": 0}),
+        ],
+        lambda x: [_log_ref(lambda v: 20 * math.log10(v))([(v + 1) / 2 for v in x])],
+    ),
+}
+_WIDTH_BOUND = ("agg_1d", "framing_agg_axis0", "framing_agg_rows", "filterbank")
+
+
+def _chain(stages):
     ch = ProcessingChain()
-    for pname, params in _TWIN_CHAINS[name]:
+    for pname, params in stages:
         ch.add(pname, params)
-    # ragged lengths, zeros (eps-floor legs), negatives, a constant
-    # array (kurtosis NULL leg), and an empty array (FIR boundary)
-    vals = [
-        [float(i) / 7.0 - 0.4 for i in range(64)],
-        [0.0] * 64,
-        [1.5] * 64,
-        [-1.0, 2.0, -3.0, 4.0] * 16,
-    ]
-    df = _one_col(spark, vals)
+    return ch
+
+
+def _assert_close(got, want, path="v"):
+    if want is None or got is None:
+        assert got is None and want is None, f"{path}: got {got!r}, want {want!r}"
+    elif isinstance(want, (list, tuple, np.ndarray)):
+        assert len(got) == len(want), f"{path}: length {len(got)} != {len(want)}"
+        for i, (g, w) in enumerate(zip(got, want)):
+            _assert_close(g, w, f"{path}[{i}]")
+    else:
+        assert math.isclose(got, float(want), rel_tol=1e-9, abs_tol=1e-12), (
+            f"{path}: got {got!r}, want {want!r}"
+        )
+
+
+@pytest.mark.parametrize("name", sorted(_NATIVE_CHAINS))
+def test_sql_twin_matches_column_path(spark, name):
+    """Each native chain, composed over the column NAME (one parse of its
+    SQL text) and over a Column operand (the same text bound once by
+    core.bind_sql), matches numpy on the edge inputs, and the two paths
+    agree bit for bit."""
+    stages, ref = _NATIVE_CHAINS[name]
+    keys = _WIDE if name in _WIDTH_BOUND else list(_EDGE)
+    df = _one_col(spark, [_EDGE[k] for k in keys])
     info = {"dtype": "array<double>"}
-    got_sql = df.select(ch.expr("x", dict(info)).alias("v")).collect()
-    got_col = df.select(ch.expr(F.col("x"), dict(info)).alias("v")).collect()
-    assert [repr(r.v) for r in got_sql] == [repr(r.v) for r in got_col]
+    ch = _chain(stages)
+    by_name = [r.v for r in df.select(ch.expr("x", dict(info)).alias("v")).collect()]
+    by_col = [r.v for r in df.select(ch.expr(F.col("x"), dict(info)).alias("v")).collect()]
+    assert [repr(v) for v in by_name] == [repr(v) for v in by_col]
+    for k, g in zip(keys, by_name):
+        _assert_close(g, ref(_EDGE[k]), f"{name}/{k}")
+
+
+def _py4j_calls(fn):
+    """py4j commands this thread sends while ``fn`` runs (the plan-build
+    chatter a Column-by-Column tree pays per operation). py4j's finalizer
+    thread sends object-release commands at its own pace; they are not
+    counted."""
+    import threading
+
+    import py4j.clientserver as cs
+
+    sent = [0]
+    me = threading.get_ident()
+    orig = cs.ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent[0] += threading.get_ident() == me
+        return orig(self, command)
+
+    cs.ClientServerConnection.send_command = counted
+    try:
+        fn()
+    finally:
+        cs.ClientServerConnection.send_command = orig
+    return sent[0]
+
+
+# A native stage built Column-wise costs one py4j round trip per
+# operation (Filterbank: ~1.6k); one parse costs one, one bind_sql over a
+# Column operand ~12. The bounds leave room for those and nothing else.
+_ONE_PARSE_CALLS = 4
+_ONE_BIND_CALLS = 24
 
 
 def test_sql_twin_path_actually_engages(spark):
-    """The one-parse path must be live for a pure-native chain (a silent
-    permanent fallback would quietly reintroduce the chatter)."""
-    ch = ProcessingChain().add("Filterbank", {"n_bands": 8, "scale": "mel", "nfft": 126, "fs": 8000.0})
-    got = ch._chain[0].sql("`x`", {"dtype": "array<double>"})
-    assert got is not None and got[0].startswith("element_at(transform(array(")
+    """Every native chain over a column name composes as text and parses
+    once; over a Column it adds one bind. A stage built Column by Column
+    (a silent fallback would reintroduce the chatter) fails the bound."""
+    info = {"dtype": "array<double>"}
+    for name, (stages, _) in sorted(_NATIVE_CHAINS.items()):
+        ch = _chain(stages)
+        ch.expr(F.col("x"), dict(info))  # warm py4j member resolution
+        assert _py4j_calls(lambda: ch.expr("x", dict(info))) <= _ONE_PARSE_CALLS, name
+        assert (
+            _py4j_calls(lambda: ch.expr(F.col("x"), dict(info)))
+            <= _ONE_PARSE_CALLS + _ONE_BIND_CALLS
+        ), name
+
+
+def test_sql_stages_after_python_stage_bind_once(spark):
+    """FFT (a pandas UDF) → Filterbank → Logarithm: the two SQL stages
+    compose as text over the bound UDF output — one Arrow stage, and a
+    build cost of the FFT alone plus one bind."""
+    info = {"fs": 16000, "n_samples": 64, "dtype": "array<double>"}
+    fft = ProcessingChain().add(FFT(type="real", format="power"))
+    full = (
+        ProcessingChain()
+        .add(FFT(type="real", format="power"))
+        .add(Filterbank(n_bands=4, scale="mel", fs=16000))
+        .add(Logarithm(type="base10"))
+    )
+    full.expr("x", dict(info))
+    fft_only = _py4j_calls(lambda: fft.expr("x", dict(info)))
+    assert _py4j_calls(lambda: full.expr("x", dict(info))) <= fft_only + _ONE_BIND_CALLS
+    df = _one_col(spark, [[float(i % 5) for i in range(64)]])
+    out = df.select(full.expr("x", dict(info)).alias("v"))
+    assert out._jdf.queryExecution().executedPlan().toString().count("ArrowEvalPython") == 1
+
+
+def test_inverse_of_column_input_roundtrips(spark):
+    """inv_expr over a Column operand (the forward chain's own output):
+    Normalizer, Scaler and Logarithm inverses compose as one bound SQL
+    run and recover the input."""
+    vals = [[1.0, 2.5, 4.0], [3.0, 0.5, 2.0]]
+    df = _one_col(spark, vals)
+    chain = (
+        ProcessingChain()
+        .add(Normalizer(type="minmax"))
+        .add(Scaler(type="wav_2_01"))
+        .add(Logarithm(type="natural"))
+    )
+    chain.fit(df, "x")
+    info = {"dtype": "array<double>"}
+    fwd = chain.expr(F.col("x"), info)
+    got = [r.v for r in df.select(chain.inv_expr(fwd, info).alias("v")).collect()]
+    np.testing.assert_allclose(got, vals, rtol=1e-12)
+    assert _py4j_calls(lambda: chain.inv_expr(fwd, info)) <= _ONE_BIND_CALLS
