@@ -74,8 +74,8 @@ def main():
     # the BEST wall: host-noise inflation is one-sided, so min is the
     # consistent estimator of the query's true cost. Every rep still
     # computes from the parquet inputs through the same noop sink; all
-    # reps land in BENCH_DETAIL.json, first-rep (old methodology) totals
-    # included, so the records stay comparable across rounds.
+    # reps land in BENCH_DETAIL_c{cpus}.json, first-rep (old methodology)
+    # totals included, so the records stay comparable across rounds.
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     timings = {}
     first_rep = {}
@@ -132,12 +132,15 @@ def main():
     # the recording harness tail-captures output: nothing may print after
     # this line, on ANY stream — a trailing multi-KB detail dump (even on
     # stderr, in case streams are merged) would evict the JSON line from
-    # the capture window. Full-name per-query timings go to a file.
+    # the capture window. Full-name per-query timings go to a file, one
+    # per core count, so runs at different core counts keep their own.
     full = {n: timings.get(n.split("_", 1)[0]) for n in names}
-    detail_path = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
+    cpus = spark.sparkContext.defaultParallelism
+    detail_path = Path(__file__).resolve().parent / f"BENCH_DETAIL_c{cpus}.json"
     detail_path.write_text(
         json.dumps(
             {
+                "cpus": cpus,
                 "detail": full,
                 "errors": errors,
                 "reps": all_reps,

@@ -72,10 +72,8 @@ def loop_actions(spark):
     since with AQE off nothing coalesces the loop's tiny exchanges and
     the session-wide count (sized for data-scale queries) pays that
     many task launches per exchange per round in pure scheduling
-    overhead. Parameterized via ``SPARK_GRAFT_LOOP_PARTITIONS`` (a
-    100 TB deployment sizes it to its loop-state volume — candidate
-    pairs, vocabulary — e.g. cores×2); local default 8 matches the
-    streaming drain right-sizing. Only valid when the loop's values are
+    overhead. Loops run on 8 shuffle partitions, the count the streaming
+    drains are right-sized to. Only valid when the loop's values are
     partition-count independent (min/sum aggregates, equi-joins,
     deterministic total orders — every loop in this repo); both confs
     are restored exactly on exit (a conf that was unset before entry is
@@ -89,16 +87,14 @@ def loop_actions(spark):
     concurrent driver threads are ever introduced, scope the loop's
     confs per-statement instead (hints / a dedicated session clone)."""
     import contextlib
-    import os
 
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
 
     @contextlib.contextmanager
     def _cm():
-        n = int(os.environ.get("SPARK_GRAFT_LOOP_PARTITIONS", 8))
         prev = {k: spark.conf.get(k, None) for k in keys}
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
             yield
         finally:
@@ -144,9 +140,7 @@ def bind_sql(expr: Column, body: str) -> Column:
     the text by name, so it may be any Column, lambda variables of an
     enclosing Python HOF included; a nested ``BOUND`` binding in
     ``body`` shadows this one innermost-first."""
-    return F.element_at(
-        F.call_function("transform", F.array(expr), F.expr(f"{BOUND} -> {body}")), 1
-    )
+    return F.call_function("transform", F.array(expr), F.expr(f"{BOUND} -> {body}"))[0]
 
 
 def _string_bucket(name: str, prefix_skip: int = 0) -> Column:

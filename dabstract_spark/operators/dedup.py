@@ -376,17 +376,13 @@ def simhash_dedup(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> 
 
 
 #: Edge-count ceiling for the single-task union-find fast path in
-#: ``connected_components``. At or under this, the whole component
-#: labeling runs as ONE executor task (O(E·α) union-find over Arrow
-#: batches) instead of diameter-many shuffle rounds; above it, the
-#: distributed propagation loop runs unchanged. 2^20 edges is a few MB
-#: of Arrow payload and a bounded Python dict — the same "bounded by
+#: ``connected_components`` (read at call time). At or under this, the
+#: whole component labeling runs as ONE executor task (O(E·α) union-find
+#: over Arrow batches) instead of diameter-many shuffle rounds; above it,
+#: the distributed propagation loop runs unchanged. 2^20 edges is a few
+#: MB of Arrow payload and a bounded Python dict — the same "bounded by
 #: construction, single task" budget the two-level top-k merge uses.
-#: Set SPARK_GRAFT_CC_LOCAL_MAX=0 to force the distributed loop.
-def _cc_local_max() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX", 1_048_576))
+CC_LOCAL_MAX = 1 << 20
 
 
 def _single_task_components(
@@ -394,7 +390,7 @@ def _single_task_components(
 ) -> DataFrame:
     """(__id, __comp) labels for every edge participant, computed by
     union-find inside ONE executor task — callers guarantee the edge
-    set is bounded (see ``_cc_local_max``). Deterministic: the label is
+    set is bounded (see ``CC_LOCAL_MAX``). Deterministic: the label is
     the component's minimum member id, independent of edge order.
     Callers drop NULL endpoints first (Arrow would hand a nullable id to
     pandas as a float NaN, and NaN != NaN never terminates ``find``);
@@ -483,8 +479,7 @@ def connected_components(
     # callers already keep `edges` cheap (checkpointed). A NULL
     # endpoint is no edge, on both paths.
     edges = edges.where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-    local_max = _cc_local_max()
-    if local_max > 0 and edges.limit(local_max + 1).count() <= local_max:
+    if CC_LOCAL_MAX > 0 and edges.limit(CC_LOCAL_MAX + 1).count() <= CC_LOCAL_MAX:
         # LAZY checkpoint: labels feeds BOTH union legs (clustered + the
         # singleton anti-join) — without the cut the union-find task
         # would run twice per downstream action
@@ -536,12 +531,19 @@ def connected_components(
             upd = upd.localCheckpoint(eager=False)
             # round 1 always changes something when any edge exists (every
             # edge (a, b), a < b lowers b's label), so skip its convergence
-            # job; an empty edge set just takes one extra (empty, cheap)
-            # round
-            changed = 1 if it == 0 else upd.agg(F.count_if("__chg")).first()[0]
+            # job unless it is the last round; an empty edge set just takes
+            # one extra (empty, cheap) round
+            if it == 0 and max_iter > 1:
+                changed = 1
+            else:
+                changed = upd.agg(F.count_if("__chg")).first()[0]
             labels = upd.drop("__chg")
             if changed == 0:
                 break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in max_iter={max_iter} rounds"
+            )
     clustered = labels.select(
         F.col("__id").alias(id_col), F.col("__comp").alias("cluster_id")
     )

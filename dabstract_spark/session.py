@@ -12,18 +12,6 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-# Cached py4j member resolution for PySpark's plan-build helpers — cuts
-# every F.* builtin from 3 driver round trips to 1 (see fastpath.py).
-# Installed at import so the DRIVER's own session benefits too (queries
-# import this module via load_table before building any plan). Guarded:
-# a pyspark whose internals moved just keeps the stock resolvers.
-try:
-    from dabstract_spark.fastpath import install as _install_fastpath
-
-    _install_fastpath()
-except Exception:  # pragma: no cover - version drift fallback
-    pass
-
 
 def scratch_base() -> str | None:
     """Fast local scratch for ephemeral sinks/checkpoints/shuffle dirs.
@@ -124,21 +112,17 @@ def get_spark(
     # bounded tiny-table windows no matter what the source declares.
     # The warning channel therefore can't distinguish a 256-row offset
     # table from a data-scale regression — the source-level audit is
-    # the real guard — so silence this one logger. Session-wide
-    # suppression also hides the warning for AD-HOC user plans this
-    # repo's audit never saw, so it is opt-out: set
-    # SPARK_GRAFT_KEEP_WINDOW_WARN=1 to keep WindowExec's warning (the
-    # audited in-repo windows then re-warn too; they are all
-    # constant-size tables by construction).
-    if not os.environ.get("SPARK_GRAFT_KEEP_WINDOW_WARN"):
-        try:
-            jvm = spark.sparkContext._jvm
-            jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-                "org.apache.spark.sql.execution.window.WindowExec",
-                jvm.org.apache.logging.log4j.Level.ERROR,
-            )
-        except Exception:
-            pass  # non-log4j2 deployments keep the warning; harmless
+    # the real guard — so silence this one logger. The suppression is
+    # session-wide: ad-hoc user plans on the same session lose the
+    # warning too.
+    try:
+        jvm = spark.sparkContext._jvm
+        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+            "org.apache.spark.sql.execution.window.WindowExec",
+            jvm.org.apache.logging.log4j.Level.ERROR,
+        )
+    except Exception:
+        pass  # non-log4j2 deployments keep the warning; harmless
     return spark
 
 

@@ -3,6 +3,7 @@ sampling, and BPE-style token counting."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dabstract_spark.operators.dedup import connected_components, minhash_dedup_clusters
@@ -909,8 +910,6 @@ def test_pca_scatter_handles_huge_magnitudes_and_null_elements(spark):
     contribute 0 to the sums (the explode path's sum-skips-null
     semantics) and NULL-out that row's projection, and ragged vectors
     fail loudly."""
-    import pytest
-
     from dabstract_spark.operators.similarity import pca_power_projection
 
     rows = [
@@ -1246,7 +1245,7 @@ def test_lsh_parameter_plan_fixture(spark):
     )
 
 
-def test_cc_local_fastpath_matches_distributed(spark):
+def test_cc_local_fastpath_matches_distributed(spark, monkeypatch):
     """The r13 single-task union-find fast path must produce exactly the
     distributed propagation loop's labels (min member id per component,
     singletons attached) on random graphs — including parallel edges,
@@ -1254,19 +1253,17 @@ def test_cc_local_fastpath_matches_distributed(spark):
     either path; Arrow would hand the union-find a NaN id) and int/bigint
     endpoints (labeled in their common type: ids past the int range on
     the dst side must survive)."""
-    import os
     import random
 
+    from dabstract_spark.operators import dedup
     from dabstract_spark.operators.dedup import connected_components
 
     def both_paths(nodes, edges):
         fast = connected_components(nodes, edges)
-        os.environ["SPARK_GRAFT_CC_LOCAL_MAX"] = "0"
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "CC_LOCAL_MAX", 0)
             slow = connected_components(nodes, edges)
             slow_rows = sorted(tuple(r) for r in slow.collect())
-        finally:
-            del os.environ["SPARK_GRAFT_CC_LOCAL_MAX"]
         assert fast.dtypes == slow.dtypes
         assert sorted(tuple(r) for r in fast.collect()) == slow_rows
         return slow_rows
@@ -1292,3 +1289,58 @@ def test_cc_local_fastpath_matches_distributed(spark):
     mixed = spark.createDataFrame([(1, 2), (2, big), (6, big + 1)], "id_a int, id_b bigint")
     nodes = spark.range(0, 8).union(spark.createDataFrame([(big,), (big + 1,)], "id bigint"))
     assert (big, 1) in both_paths(nodes, mixed)
+
+
+def _path_graph(spark, n_edges, n_nodes):
+    """Nodes 0..n_nodes-1, the first n_edges + 1 of them joined in a
+    chain (labels travel one hop per propagation round), the rest
+    singletons."""
+    nodes = spark.range(0, n_nodes).selectExpr("id")
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in reversed(range(n_edges))], "id_a bigint, id_b bigint"
+    )
+    return nodes, edges
+
+
+def test_cc_distributed_raises_when_not_converged(spark, monkeypatch):
+    """The propagation loop must not hand back partial labels: an 8-node
+    path needs 7 rounds to settle, so 3 rounds must raise, and a bound
+    that just suffices must give every node label 0."""
+    from dabstract_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_LOCAL_MAX", 0)
+    nodes, edges = _path_graph(spark, 7, 8)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(nodes, edges, max_iter=3).collect()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components(nodes, edges, max_iter=1).collect()
+    out = dedup.connected_components(nodes, edges, max_iter=8)
+    assert sorted(tuple(r) for r in out.collect()) == [(i, 0) for i in range(8)]
+
+
+def test_cc_local_cap_boundary(spark, monkeypatch):
+    """With the cap at 4, a 4-edge graph takes the single-task path and a
+    5-edge graph the distributed loop; both must label exactly as the
+    other path does."""
+    from dabstract_spark.operators import dedup
+
+    calls = []
+    local = dedup._single_task_components
+
+    def counted(*a, **k):
+        calls.append(1)
+        return local(*a, **k)
+
+    monkeypatch.setattr(dedup, "_single_task_components", counted)
+    for n_edges, takes_local in ((4, True), (5, False)):
+        nodes, edges = _path_graph(spark, n_edges, n_edges + 3)
+        monkeypatch.setattr(dedup, "CC_LOCAL_MAX", 4)
+        calls.clear()
+        capped = sorted(tuple(r) for r in dedup.connected_components(nodes, edges).collect())
+        assert bool(calls) == takes_local, n_edges
+        monkeypatch.setattr(dedup, "CC_LOCAL_MAX", 0 if takes_local else 1 << 20)
+        other = sorted(tuple(r) for r in dedup.connected_components(nodes, edges).collect())
+        assert capped == other, n_edges
+        assert capped == [(i, 0) for i in range(n_edges + 1)] + [
+            (n_edges + 1, n_edges + 1), (n_edges + 2, n_edges + 2)
+        ]

@@ -520,9 +520,11 @@ def _py4j_calls(fn):
     return sent[0]
 
 
-# A native stage built Column-wise costs one py4j round trip per
-# operation (Filterbank: ~1.6k); one parse costs one, one bind_sql over a
-# Column operand ~12. The bounds leave room for those and nothing else.
+# Each pyspark builtin call resolves its JVM function afresh: about three
+# py4j round trips. A native stage built Column-wise pays that per
+# operation (Filterbank: thousands); one parse (F.expr) costs 3, and one
+# bind_sql over a Column operand 21 (F.array 8, F.expr 3, F.call_function
+# 9, the item access 1). The bounds leave room for those and nothing else.
 _ONE_PARSE_CALLS = 4
 _ONE_BIND_CALLS = 24
 

@@ -46,19 +46,3 @@ def test_threshold_excludes_fact_tables(spark, monkeypatch):
     df = S.load_table(spark, SF_SMOKE, "documents")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Scan parquet" in plan
-
-
-def test_fastpath_member_cache_installed_and_value_neutral(spark):
-    """The py4j member-resolution cache (fastpath.py) must be active and
-    must not change what an expression computes: a second F.* invocation
-    resolves through the cache and yields the same result as the first."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.functions import builtin as B
-
-    assert getattr(B._get_jvm_function, "_sparkdab_fastpath", False)
-    df = spark.range(3)
-    # two identical expressions: the first may fill the cache, the second
-    # must be served from it — equal results either way
-    a = df.select(F.element_at(F.array(F.col("id"), F.col("id") * 2), 2).alias("v"))
-    b = df.select(F.element_at(F.array(F.col("id"), F.col("id") * 2), 2).alias("v"))
-    assert [r.v for r in a.collect()] == [r.v for r in b.collect()] == [0, 2, 4]
