@@ -22,11 +22,6 @@ def md5_order(col: Column | str, seed: int = 0) -> Column:
     return F.md5(F.concat(F.lit(str(seed) + ":"), c.cast("string")))
 
 
-def md5_order_sql(expr: str, seed: int = 0) -> str:
-    """The identical ordering key in ANSI/DuckDB SQL (oracle side)."""
-    return f"md5('{seed}:' || CAST({expr} AS VARCHAR))"
-
-
 def md5_bucket(col: Column | str, buckets: int, seed: int = 0) -> Column:
     """Uniform deterministic bucket in [0, buckets): parse the first 8 hex
     chars of md5 and mod. Spark's conv() handles hex→decimal JVM-side."""

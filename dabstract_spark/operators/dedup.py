@@ -30,10 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from dabstract_spark.core import bind_once as _bind
-from dabstract_spark.operators.text import shingles_from_tokens, tokens, word_shingles
-
-
-from dabstract_spark.core import loop_actions as _loop_actions  # noqa: E402
+from dabstract_spark.core import loop_actions as _loop_actions
+from dabstract_spark.operators.text import _tokens_sql, shingles_from_tokens, tokens
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -152,11 +150,6 @@ def _poly_shingle_hashes_sql(th: str, k: int) -> str:
     )
 
 
-def _poly_shingle_hashes(th_name: str, k: int) -> Column:
-    """Shingle hashes from a STAGED token-hash array column (by name)."""
-    return F.expr(_poly_shingle_hashes_sql(f"`{th_name}`", k))
-
-
 def _signature_over_hashes_sql(hs: str, n_hashes: int) -> str:
     """SQL form of the MinHash signature: min of (a_i*h + b_i) mod p per
     hash function over the staged base-hash array."""
@@ -170,23 +163,6 @@ def _signature_over_hashes_sql(hs: str, n_hashes: int) -> str:
 def _signature_over_hashes(hs_name: str, n_hashes: int) -> Column:
     """MinHash signature from a STAGED base-hash array column (by name)."""
     return F.expr(_signature_over_hashes_sql(f"`{hs_name}`", n_hashes))
-
-
-def _tokens_sql(col: str) -> str:
-    """SQL form of ``text.tokens`` (split + empty filter)."""
-    return f"filter(split(lower({col}), '\\\\W+'), t -> t != '')"
-
-
-def minhash_signature(col: str, n_hashes: int = 16, k: int = 3) -> Column:
-    """Array of n_hashes MinHash values over word k-shingles, as a single
-    expression (for callers that can't stage a column; same hash family
-    as ``minhash_bands``). Each pipeline step is lambda-bound (through a
-    single-element array, the bind_once trick, here spelled in SQL) so
-    the token-md5 array evaluates once, not once per shingle window."""
-    th = f"transform({_tokens_sql(f'`{col}`')}, u -> {_shingle_hash_sql('u')})"
-    hs = f"element_at(transform(array({th}), t -> {_poly_shingle_hashes_sql('t', k)}), 1)"
-    sig = f"element_at(transform(array({hs}), s -> {_signature_over_hashes_sql('s', n_hashes)}), 1)"
-    return F.expr(sig)
 
 
 def _staged_shingle_hashes(
@@ -460,9 +436,8 @@ def connected_components(
     plan size stays constant, and convergence (no label changed) is
     detected from a counter on the same materialized result — no extra
     scan. Rounds needed = graph diameter; near-dup clusters are
-    shallow (usually 2-3 rounds). For adversarially long chain graphs
-    at 100 TB use ``connected_components_starcontract``, which
-    converges in O(log n) rounds over the same join primitive.
+    shallow (usually 2-3 rounds). Above ``CC_LOCAL_MAX`` edges, a graph
+    whose diameter exceeds ``max_iter`` raises ``RuntimeError``.
     """
     # bounded-edges fast path (r13, guide §1.2 — fix the algorithm before
     # the per-round costs): component labeling is a sequential O(E·α)
@@ -486,20 +461,28 @@ def connected_components(
         labels = _single_task_components(edges, src_col, dst_col).localCheckpoint(
             eager=False
         )
-        clustered = labels.select(
-            F.col("__id").alias(id_col), F.col("__comp").alias("cluster_id")
-        )
-        singletons = nodes.join(
-            labels, nodes[id_col] == labels["__id"], "left_anti"
-        ).select(F.col(id_col), F.col(id_col).alias("cluster_id"))
-        return clustered.union(singletons)
+    else:
+        labels = _propagated_labels(edges, src_col, dst_col, max_iter)
+    # only edge participants are labeled on either path — in a real
+    # corpus the overwhelming majority of rows have no candidate pair;
+    # they are re-attached as singleton clusters with one anti-join
+    clustered = labels.select(
+        F.col("__id").alias(id_col), F.col("__comp").alias("cluster_id")
+    )
+    singletons = nodes.join(
+        labels, nodes[id_col] == labels["__id"], "left_anti"
+    ).select(F.col(id_col), F.col(id_col).alias("cluster_id"))
+    return clustered.union(singletons)
+
+
+def _propagated_labels(
+    edges: DataFrame, src_col: str, dst_col: str, max_iter: int
+) -> DataFrame:
+    """(__id, __comp) labels for every edge participant by min-label
+    propagation: ``connected_components``' path above the cap."""
     sym = edges.selectExpr(
         f"`{src_col}` AS __src", f"`{dst_col}` AS __dst"
     ).union(edges.selectExpr(f"`{dst_col}` AS __src", f"`{src_col}` AS __dst"))
-    # only edge participants enter the iteration — in a real corpus the
-    # overwhelming majority of rows have no candidate pair and must not
-    # be dragged through every propagation round; they are re-attached
-    # as singleton clusters with one anti-join at the end
     labels = sym.selectExpr("__src AS __id").distinct().selectExpr(
         "__id", "__id AS __comp"
     )
@@ -544,109 +527,7 @@ def connected_components(
             raise RuntimeError(
                 f"connected_components did not converge in max_iter={max_iter} rounds"
             )
-    clustered = labels.select(
-        F.col("__id").alias(id_col), F.col("__comp").alias("cluster_id")
-    )
-    singletons = nodes.join(
-        labels, nodes[id_col] == labels["__id"], "left_anti"
-    ).select(F.col(id_col), F.col(id_col).alias("cluster_id"))
-    return clustered.union(singletons)
-
-
-def connected_components_starcontract(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — O(log n) rounds even on adversarially deep graphs, where
-    min-label propagation (``connected_components``) needs
-    diameter-many rounds. Per round: one groupBy to compute
-    m(u) = min(u ∪ Γ(u)) and one join to rewrite edges toward m(u).
-
-    large-star hangs every neighbor v > u under m(u); small-star hangs
-    every neighbor v < u (and u itself) under m(u). The edge set
-    contracts to a star forest; convergence = every edge already points
-    at its endpoint's minimum, checked with one count on the same
-    joined frame that builds the next edge set.
-    """
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("__a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("__b"),
-        )
-        .filter(F.col("__a") != F.col("__b"))
-        .distinct()
-    )
-    # loop_actions (r12) — same rationale and measurement as
-    # connected_components: one job per round instead of a job per AQE
-    # query stage, loop-sized shuffles, identical edges.
-    prev_moved = 1
-    with _loop_actions(edges.sparkSession):
-        for it in range(max_iter):
-            large = it % 2 == 0
-            sym = e.select(F.col("__a").alias("__u"), F.col("__b").alias("__v")).union(
-                e.select(F.col("__b").alias("__u"), F.col("__a").alias("__v"))
-            )
-            m = (
-                sym.groupBy("__u")
-                .agg(F.min("__v").alias("__mn"))
-                .select("__u", F.least(F.col("__u"), F.col("__mn")).alias("__m"))
-            )
-            joined = sym.join(m, "__u")
-            if large:
-                new = joined.filter(F.col("__v") > F.col("__u")).select(
-                    F.col("__v").alias("__x"), F.col("__m").alias("__y")
-                )
-            else:
-                new = joined.filter(F.col("__v") < F.col("__u")).select(
-                    F.col("__v").alias("__x"), F.col("__m").alias("__y")
-                ).union(m.select(F.col("__u").alias("__x"), F.col("__m").alias("__y")))
-            new_e = (
-                new.select(
-                    F.least(F.col("__x"), F.col("__y")).alias("__a"),
-                    F.greatest(F.col("__x"), F.col("__y")).alias("__b"),
-                )
-                .filter(F.col("__a") != F.col("__b"))
-                .distinct()
-                # LAZY: the convergence count below is the first action,
-                # so one job materializes the round AND counts (r12 —
-                # same move as the propagation loop)
-                .localCheckpoint(eager=False)
-            )
-            # converged only when a FULL large+small cycle changes nothing —
-            # one pass can reproduce its input mid-contraction (observed on
-            # chain graphs) while the other still has work to do. Both sides
-            # are distinct sets, so set difference in EITHER direction is a
-            # nonzero signed-tag sum — one job, not two exceptAll counts.
-            moved = (
-                new_e.withColumn("__t", F.lit(1))
-                .union(e.withColumn("__t", F.lit(-1)))
-                .groupBy("__a", "__b")
-                .agg(F.sum("__t").alias("__d"))
-                .filter(F.col("__d") != 0)
-                .limit(1)
-                .count()
-            )
-            e = new_e
-            if moved == 0 and prev_moved == 0:
-                break
-            prev_moved = moved
-    # star forest: each non-root node has its component min among its
-    # neighbors; roots and isolated nodes label themselves
-    labels = e.select(F.col("__b").alias("__id"), F.col("__a").alias("__comp"))
-    labels = labels.groupBy("__id").agg(F.min("__comp").alias("__comp"))
-    clustered = labels.select(
-        F.col("__id").alias(id_col), F.col("__comp").alias("cluster_id")
-    )
-    roots = nodes.join(labels, nodes[id_col] == labels["__id"], "left_anti").select(
-        F.col(id_col), F.col(id_col).alias("cluster_id")
-    )
-    return clustered.union(roots)
+    return labels
 
 
 def minhash_dedup_clusters(

@@ -1307,19 +1307,9 @@ def centroid_shift_from_sums(
 # the LOWEST candidate index (first position of the min), so every step
 # is deterministic under duplicate/zero vectors.
 # --------------------------------------------------------------------- #
-def _micro_vec(col: Column) -> Column:
-    """Elementwise micro-unit encode: round(x, 6)·1e6 as bigint."""
-    return F.transform(
-        col,
-        lambda x: (
-            F.round(x.cast("double"), 6).cast("decimal(18,6)") * F.lit(1_000_000)
-        ).cast("bigint"),
-    )
-
-
-# SQL-text twin of _micro_vec for one-parse composers (r12 chatter cut):
-# identical expression tree — round→DECIMAL(18,6)→×1000000(int literal)→
-# BIGINT — so results are bit-identical to the Column form.
+# Elementwise micro-unit encode, round(x, 6)·1e6 as BIGINT, spelled as
+# SQL text for one-parse composers (r12 chatter cut):
+# round→DECIMAL(18,6)→×1000000 (int literal)→BIGINT.
 _MICRO_SQL = (
     "transform({c}, x -> CAST(CAST(round(CAST(x AS DOUBLE), 6)"
     " AS DECIMAL(18,6)) * 1000000 AS BIGINT))"

@@ -48,16 +48,6 @@ def salted_count_sum(
     )
 
 
-def replicated_broadcast_join(
-    big: DataFrame, small: DataFrame, on: str, how: str = "inner"
-) -> DataFrame:
-    """Skew-immune join shape: broadcast the small side so NO shuffle of
-    the big side happens at all — a skewed key costs only its scan time.
-    (Thin wrapper that documents the intent; at 100 TB prefer this over
-    a shuffle join whenever the small side fits the broadcast budget.)"""
-    return big.join(F.broadcast(small), on, how)
-
-
 def skew_advice(
     df: DataFrame,
     key_cols: list[str],
@@ -74,8 +64,8 @@ def skew_advice(
     deterministic and oracle-checkable):
 
     - ``broadcast`` — the key's distinct-value table is small
-      (``n_keys <= broadcast_max_keys``): join against it via
-      ``replicated_broadcast_join`` and no shuffle of the big side
+      (``n_keys <= broadcast_max_keys``): join against it with
+      a broadcast join and no shuffle of the big side
       happens at all; skew becomes irrelevant.
     - ``salt(k)`` — the key alone overflows a reducer's fair share
       (suggested salts ``k = ceil(cnt·n_partitions/total) > 1``): shard

@@ -144,13 +144,6 @@ def shingles_from_tokens(t: Column, k: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def word_shingles(col: Column | str, k: int = 3) -> Column:
-    """Word k-gram shingle strings — the dedup unit for MinHash/Jaccard.
-    Rows with fewer than k tokens produce an empty array. Prefer staging
-    tokens as a column + shingles_from_tokens in hot paths."""
-    return shingles_from_tokens(tokens(col), k)
-
-
 def punct_ratio(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     n_punct = F.length(F.regexp_replace(c, r"[^.!?,;:]", ""))
@@ -1110,29 +1103,15 @@ def perplexity_buckets(
     )
 
 
-def dsir_features(col: Column | str) -> Column:
-    """DSIR's hashed n-gram feature list: word unigrams + adjacent
-    bigrams, tagged so 'u:x' can never collide with 'b:x y' before
-    hashing. A document's importance evidence is the multiset of these
-    strings; bucketing (below) fixes the feature dimension regardless of
-    vocabulary size — the memory bound that makes the method run at
-    web scale."""
-    t = tokens(col)
-    uni = F.transform(t, lambda x: F.concat(F.lit("u:"), x))
-    n1 = F.greatest(F.size(t) - 1, F.lit(0))
-    big = F.zip_with(
-        F.slice(t, 1, n1),
-        F.slice(t, 2, n1),
-        lambda a, b: F.concat(F.lit("b:"), a, F.lit(" "), b),
-    )
-    return F.concat(uni, big)
-
-
 def _dsir_features_sql(col_sql: str) -> str:
-    """SQL-text twin of ``dsir_features`` (one-parse composers, r12
-    chatter cut): the identical expression tree, so buckets and scores
-    are unchanged. Matters doubly for the STREAMING scorer, which
-    rebuilds this plan once per micro-batch."""
+    """DSIR's hashed n-gram feature list, as SQL text: word unigrams +
+    adjacent bigrams, tagged so 'u:x' can never collide with 'b:x y'
+    before hashing. A document's importance evidence is the multiset of
+    these strings; bucketing (below) fixes the feature dimension
+    regardless of vocabulary size — the memory bound that makes the
+    method run at web scale. One parse per plan (r12 chatter cut), which
+    matters doubly for the STREAMING scorer: it rebuilds this plan once
+    per micro-batch."""
     t = _tokens_sql(col_sql)
     return (
         f"concat(transform({t}, x -> concat('u:', x)),"

@@ -23,12 +23,6 @@ from dabstract_spark.queries import _t, query
 _DIM = 64
 
 
-def _round_arr(col, nd=6):
-    # "+ 0.0" folds IEEE -0.0 to +0.0 — engines disagree on the sign of
-    # zero after rounding tiny negatives, and the compare is repr-based
-    return F.transform(col, lambda x: F.round(x, nd) + F.lit(0.0))
-
-
 # --------------------------------------------------------------------- #
 # Scaler (§2.8) — pure elementwise expression, bit-exact across engines
 # --------------------------------------------------------------------- #

@@ -359,10 +359,6 @@ def _dot_sql(a: str, b: str, dim: int = 64) -> str:
     )
 
 
-def _norm_sql(a: str) -> str:
-    return f"sqrt(list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE)))"
-
-
 def _norm_denom_sql(a: str) -> str:
     """Oracle twin of similarity.norm_denom: zero norm -> 1."""
     n2 = f"list_sum(list_transform({a}, x -> x::DOUBLE * x::DOUBLE))"
@@ -6015,7 +6011,7 @@ def q262_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _poly_sql(k: int) -> str:
     """k-token polynomial window fold over a CTE column named th
     (generalizes _POLY3 — identical arithmetic to
-    dedup._poly_shingle_hashes)."""
+    dedup._poly_shingle_hashes_sql)."""
     expr = "th[i]"
     for j in range(1, k):
         expr = f"(({expr}) * 131 + th[i+{j}]) % 2147483647"

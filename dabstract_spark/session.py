@@ -182,13 +182,13 @@ def _parallel_layout(spark: SparkSession, path: str) -> str:
 # pruning stay in play (and stay auditable: an InMemoryRelation has no
 # PushedFilters). DuckDB gets the same effect implicitly from its
 # buffer pool; `.persist()` is Spark's equivalent, applied once per
-# (session, file, mtime). Threshold via SPARK_GRAFT_CACHE_MAX_BYTES;
-# at cluster scale this is the "broadcast-able dims stay resident,
-# facts scan" memory budget, sized per executor.
+# (session, file, mtime). The threshold is the on-disk size in bytes
+# (``_CACHE_MAX_BYTES``); at cluster scale this is the "broadcast-able
+# dims stay resident, facts scan" memory budget, sized per executor.
 _TABLE_CACHE: dict = {}
 _PLAN_MEMO: dict = {}
 _NANOS_CONF_SET: set = set()
-_CACHE_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_CACHE_MAX_BYTES", 2_000_000))
+_CACHE_MAX_BYTES = 2_000_000
 
 
 def table_cache_disabled():

@@ -60,50 +60,6 @@ def test_minhash_clusters_cover_all_rows(spark):
     assert got[1] == got[2] == 1  # near-dups share the min id
 
 
-def test_starcontract_matches_propagation_on_random_graphs(spark):
-    import random
-
-    from dabstract_spark.operators.dedup import connected_components_starcontract
-
-    for seed in range(6):
-        rng = random.Random(seed)
-        n = 24
-        node_ids = list(range(n))
-        pairs = sorted(
-            {
-                tuple(sorted(rng.sample(node_ids, 2)))
-                for _ in range(rng.randint(0, 20))
-            }
-        )
-        nodes = spark.createDataFrame([(i,) for i in node_ids], "id bigint")
-        if pairs:
-            edges = spark.createDataFrame(pairs, "id_a bigint, id_b bigint")
-        else:
-            edges = spark.createDataFrame([], "id_a bigint, id_b bigint")
-        a = {
-            r.id: r.cluster_id
-            for r in connected_components(nodes, edges).collect()
-        }
-        b = {
-            r.id: r.cluster_id
-            for r in connected_components_starcontract(nodes, edges).collect()
-        }
-        assert a == b, f"seed {seed}: {a} != {b}"
-
-
-def test_starcontract_deep_chain(spark):
-    from dabstract_spark.operators.dedup import connected_components_starcontract
-
-    n = 64  # diameter 63: propagation would need ~63 rounds, stars ~log n
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "id bigint")
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a bigint, id_b bigint"
-    )
-    out = connected_components_starcontract(nodes, edges).collect()
-    assert {r.cluster_id for r in out} == {0}
-    assert len(out) == n
-
-
 def test_embedding_neardup_max_bucket_cap(spark):
     from dabstract_spark.operators.similarity import embedding_neardup_pairs
 
@@ -204,27 +160,21 @@ def test_minhash_exact_duplicate_always_pairs(spark):
 
 
 def test_single_expression_variants_match_staged(spark):
-    """minhash_signature / simhash (expression forms) must equal the
-    staged pipelines used in the hot paths."""
-    from dabstract_spark.operators.dedup import minhash_signature, simhash
+    """simhash (expression form) must equal the staged pipeline used in
+    the hot paths."""
+    from dabstract_spark.operators.dedup import simhash
 
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the dog"), (2, "hi"), (3, None)],
         "doc_id bigint, text string",
     )
-    got = df.select(
-        "doc_id",
-        minhash_signature("text", n_hashes=16, k=3).alias("sig"),
-        simhash("text", bits=16).alias("sh"),
-    ).collect()
+    got = df.select("doc_id", simhash("text", bits=16).alias("sh")).collect()
     by_id = {r.doc_id: r for r in got}
     from dabstract_spark.operators.dedup import simhash_df
 
     staged = {r.doc_id: r.simhash for r in simhash_df(df, "doc_id", "text").collect()}
     assert [by_id[i].sh for i in (1, 2, 3)] == [staged[i] for i in (1, 2, 3)]
-    assert len(by_id[1].sig) == 16 and all(v is not None for v in by_id[1].sig)
-    assert by_id[2].sig is None  # < k tokens
-    assert by_id[3].sig is None and by_id[3].sh is None
+    assert by_id[3].sh is None
 
 
 def test_driver_side_accessors(spark):

@@ -275,39 +275,48 @@ def test_ivf_refine_improves_objective(spark):
 
 
 def test_filterbank_native_matches_udf_fallback(spark, monkeypatch):
-    """The sparse-unrolled JVM path and the Arrow-UDF matmul fallback
-    must agree (up to float summation order)."""
-    rng = np.random.default_rng(3)
-    vals = [_pylist(rng.standard_normal(33))]
-    native = _apply(
-        spark,
-        Filterbank(n_bands=4, scale="mel", nfft=64, fs=8000),
-        vals,
-        info={"fs": 8000, "nfft": 64},
-    )
-    monkeypatch.setattr(Filterbank, "MAX_NATIVE_NNZ", 0)
-    udf = _apply(
-        spark,
-        Filterbank(n_bands=4, scale="mel", nfft=64, fs=8000),
-        vals,
-        info={"fs": 8000, "nfft": 64},
-    )
-    np.testing.assert_allclose(native[0], udf[0], rtol=1e-10)
+    """At the cap's exact boundary: with MAX_NATIVE_NNZ equal to the
+    bank's nonzeros, sql() gives the sparse-unrolled JVM text; one
+    below, it gives None and the chain takes the Arrow-UDF matmul. The
+    two must agree (up to float summation order) on ordinary rows (the
+    all-zero row hits the eps floor), and both must raise on length-1
+    and empty rows, which are shorter than the bank."""
+    from pyspark.errors import PySparkException
+
+    fb = Filterbank(n_bands=4, scale="mel", nfft=64, fs=8000)
+    info = {"fs": 8000, "nfft": 64}
+    nnz = int(np.count_nonzero(fb._matrix(info)))
+    vals = [_pylist(np.random.default_rng(3).standard_normal(33)), [0.0] * 33]
+    got = {}
+    for cap, native in ((nnz, True), (nnz - 1, False)):
+        monkeypatch.setattr(Filterbank, "MAX_NATIVE_NNZ", cap)
+        assert (fb.sql("`x`", info) is not None) == native, cap
+        got[native] = _apply(spark, fb, vals, info=info)
+        for short in ([1.5], []):
+            with pytest.raises(PySparkException):
+                _apply(spark, fb, [short], info=info)
+    for a, b in zip(got[True], got[False]):
+        np.testing.assert_allclose(a, b, rtol=1e-10)
+    assert got[True][1] == [float(np.finfo(float).eps)] * 4
 
 
 def test_fir_empty_and_short_arrays(spark, monkeypatch):
-    """Empty input -> empty output, short input -> same length out, on
-    both the unrolled native path (the sequence(1, 0) descending trap
-    must not emit spurious elements) and the Arrow fallback (np.convolve
-    rejects an empty input)."""
+    """At the cap's exact boundary: with MAX_NATIVE_TAPS equal to the
+    filter's taps, sql() gives the unrolled native text; one below, it
+    gives None and the chain takes the Arrow fallback. Both must match
+    np.convolve on ordinary, short and length-1 rows, and map an empty
+    row to an empty row (the native sequence(1, 0) descending trap must
+    not emit spurious elements; np.convolve rejects an empty input)."""
     fir = FIRFilter(type="lowpass", f=1000.0, taps=9, fs=8000.0)
     h = fir.coefficients(8000.0)
-    for max_native_taps in (FIRFilter.MAX_NATIVE_TAPS, 0):
-        monkeypatch.setattr(FIRFilter, "MAX_NATIVE_TAPS", max_native_taps)
-        got = _apply(spark, fir, [[], [1.0, 2.0]], info={"fs": 8000.0})
-        assert got[0] == []
-        assert len(got[1]) == 2
-        np.testing.assert_allclose(got[1], np.convolve([1.0, 2.0], h)[:2], rtol=1e-12)
+    rows = [_pylist(np.random.default_rng(7).standard_normal(20)), [1.0, 2.0], [1.5], []]
+    for cap, native in ((fir.taps, True), (fir.taps - 1, False)):
+        monkeypatch.setattr(FIRFilter, "MAX_NATIVE_TAPS", cap)
+        assert (fir.sql("`x`", {"fs": 8000.0}) is not None) == native, cap
+        got = _apply(spark, fir, rows, info={"fs": 8000.0})
+        assert got[3] == []
+        for row, out in zip(rows[:3], got):
+            np.testing.assert_allclose(out, np.convolve(row, h)[: len(row)], rtol=1e-12)
 
 
 def test_aggregation_2d_kurtosis_matches_numpy(spark):

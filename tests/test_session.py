@@ -1,6 +1,6 @@
 """Session-level loading behavior: the hot-table cache.
 
-Small tables (on-disk size within ``SPARK_GRAFT_CACHE_MAX_BYTES``) are
+Small tables (on-disk size within ``session._CACHE_MAX_BYTES``) are
 persisted once per (session, file, mtime) — the warehouse "hot dims +
 working set stay resident, facts scan" split. The cache must be
 value-neutral, keyed correctly, and bypassable for fact-path plan
