@@ -17,7 +17,9 @@ not reproducible across the two executions that a lazy two-pass rank
 requires), per-bucket counts become cumulative offsets via a window over
 the tiny bucket table, and ``row_id = offset[bucket] + row_number()``
 within each bucket. One data shuffle (hash on the bucket), two small
-jobs, no Python stage, no RDD, no sampling.
+jobs, no Python stage, no RDD, no sampling. That is the keyless case of
+``bucketed_rank``, which also serves the grouped ranks, exact-count
+samples and per-group prefix sums of ``operators/select.py``.
 
 When the table already has a unique orderable key (``o_orderkey``,
 ``doc_id``…) prefer ``row_id_from_key`` — zero extra work and stable
@@ -25,6 +27,8 @@ across runs, which positional derivation can never be under re-partition.
 """
 
 from __future__ import annotations
+
+import contextlib
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -64,6 +68,25 @@ def sql_double_array(vals) -> str:
     """SQL literal array<double> (exact per-element round trip)."""
     return "array(" + ",".join(sql_double(v) for v in vals) + ")"
 
+
+@contextlib.contextmanager
+def conf_override(spark, settings: dict):
+    """Set session confs for the block, then restore each one exactly: a
+    conf that was unset before entry is unset again, not set to the
+    default it reads back as while unset."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def loop_actions(spark):
     """Context manager right-sizing a driver fixed-point loop's OWN
     actions (guide §1.2/§2.2): AQE off — one job per action instead of
@@ -76,9 +99,8 @@ def loop_actions(spark):
     drains are right-sized to. Only valid when the loop's values are
     partition-count independent (min/sum aggregates, equi-joins,
     deterministic total orders — every loop in this repo); both confs
-    are restored exactly on exit (a conf that was unset before entry is
-    unset again, not set to its default) and the RETURNED frames
-    execute under the caller's conf.
+    are restored exactly on exit (``conf_override``) and the RETURNED
+    frames execute under the caller's conf.
 
     Session-scope caveat: the override mutates SESSION conf, so it
     assumes the single-threaded driver every caller here is — a
@@ -86,25 +108,10 @@ def loop_actions(spark):
     runs would execute with AQE off and loop-sized partitions. If
     concurrent driver threads are ever introduced, scope the loop's
     confs per-statement instead (hints / a dedicated session clone)."""
-    import contextlib
-
-    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
-
-    @contextlib.contextmanager
-    def _cm():
-        prev = {k: spark.conf.get(k, None) for k in keys}
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            yield
-        finally:
-            for k, v in prev.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-
-    return _cm()
+    return conf_override(
+        spark,
+        {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "8"},
+    )
 
 
 # Strictly greater than the largest Unicode code point, so
@@ -182,6 +189,151 @@ def _numeric_bucket(df: DataFrame, c: Column, buckets: int) -> tuple[DataFrame, 
     return with_mm, g
 
 
+#: Largest side table, in rows, that a caller's size hint may broadcast
+#: statically. Past it, or with no hint, joins stay plain and AQE
+#: broadcasts at runtime only when the table proves small.
+BROADCAST_MAX_ROWS = 1_000_000
+
+#: Rows per group of a bucketed rank's offsets table: 256 buckets plus
+#: a NULL bucket.
+BUCKET_TABLE_ROWS = 257
+
+
+def hinted_broadcast(hint: int | None, rows_per_key: int = 1):
+    """THE static broadcast gate: ``F.broadcast`` when ``hint`` (an upper
+    bound on a side table's key count) × ``rows_per_key`` fits
+    ``BROADCAST_MAX_ROWS``, else the identity. No count job, and no
+    driver-side broadcast of a table nobody bounded (per-URL-host
+    calibration over the open web: 10^7 groups × 257 = 2.5e9 rows)."""
+    if hint is not None and int(hint) * rows_per_key <= BROADCAST_MAX_ROWS:
+        return F.broadcast
+    return lambda d: d
+
+
+def _value_range_bucket(d: DataFrame, value: Column, null_bucket: int, bcast) -> DataFrame:
+    """Per-group VALUE-RANGE bucket ``__b0`` in [0, 255]: the group's
+    [min, max] of ``value`` (one map-side-combined aggregate, n_groups
+    rows, joined back on ``__gk``) split into 256 equal ranges, so
+    bucket b wholly precedes bucket b+1 in the group's order and equal
+    values share a bucket. NULL values sort outside the range, into
+    ``null_bucket``."""
+    keyed = d.withColumn("__k", value.cast("double"))
+    stats = keyed.groupBy("__gk").agg(
+        F.expr("min(__k) AS __kmin"), F.expr("max(__k) AS __kmax")
+    )
+    bucket = (
+        f"CASE WHEN __k IS NULL THEN {int(null_bucket)}"
+        " WHEN (__kmax - __kmin) <= 0 THEN 0"
+        " ELSE least(255, CAST(floor((__k - __kmin) * 256.0"
+        " / (__kmax - __kmin)) AS INT)) END"
+    )
+    return (
+        keyed.join(bcast(stats), "__gk")
+        .withColumn("__b0", F.expr(bucket))
+        .drop("__k", "__kmin", "__kmax")
+    )
+
+
+def bucketed_rank(
+    df: DataFrame,
+    keys: list,
+    order: list,
+    out: str,
+    *,
+    bucket=None,
+    value_range: Column | None = None,
+    nulls_last: bool = False,
+    weight: Column | None = None,
+    total: str | None = None,
+    n_groups_hint: int | None = None,
+) -> DataFrame:
+    """THE distributed bucketed rank: ``out`` = each row's 1-based
+    position in ``order`` within its ``keys`` group (or, with
+    ``weight``, the group's inclusive running sum of ``weight`` in that
+    order), computed without any window over a whole group.
+
+    Every row carries a bucket that is monotone in ``order`` (a bucket
+    never holds a row ordered after a row of a later bucket). Then:
+
+    1. per-(keys, bucket) row count (or ``weight`` sum) — a table of
+       ≤ n_groups × ``BUCKET_TABLE_ROWS`` rows;
+    2. over that bounded table, the exclusive prefix ``__off`` and,
+       when ``total`` names a column, the group total;
+    3. the table joins back to the rows;
+    4. ``out`` = ``__off`` + a bucket-local ``row_number`` (or running
+       sum), so each window task holds one bucket of one group.
+
+    A corpus-dominating group spreads over its buckets' tasks instead of
+    serializing into one sort, with no count job. Under a total
+    ``order`` the result is byte-identical to the naive
+    ``Window.partitionBy(keys).orderBy(order)`` form.
+
+    ``keys``: group column names, possibly empty (one global order; the
+    prefix window then runs over the constant-partitioned bucket table,
+    ≤256 hex / 4·npart numeric / n_stages×256 composite buckets for the
+    callers here). A NULL group value is a real group: the keys travel
+    as ONE struct column ``__gk``, whose equality matches NULL fields,
+    so the join back is null-safe while staying a plain equi-join whose
+    shuffle the bucket-local window reuses on the hint-less path.
+
+    ``bucket``: a Column, or a list of Columns whose lexicographic
+    order is the bucket order (``curriculum_order``'s (stage, md5
+    prefix)); a row with a NULL bucket value finds no offsets row and
+    drops. ``value_range`` (keyed ranks only): instead of ``bucket``, a
+    numeric Column split per group into 256 value ranges by the group's
+    min/max; NULLs go first (bucket -1) or, with ``nulls_last``, last
+    (bucket 256).
+
+    ``weight``: sum this instead of counting rows. The offset stays NULL
+    when every earlier bucket's sum is NULL, and ``out`` is NULL exactly
+    when the row's whole inclusive prefix is — the naive window cumsum,
+    NULL weights included.
+
+    Side tables broadcast statically under ``hinted_broadcast``
+    (``n_groups_hint`` × ``BUCKET_TABLE_ROWS``; keyless = one group).
+    Returns ``df``'s columns plus ``out`` (and ``total``)."""
+    part = ["__gk"] if keys else []
+    bcast = hinted_broadcast(n_groups_hint if keys else 1, BUCKET_TABLE_ROWS)
+    d = df.withColumn("__gk", F.struct(*keys)) if keys else df
+    if value_range is not None:
+        d = _value_range_bucket(d, value_range, 256 if nulls_last else -1, bcast)
+        bnames = ["__b0"]
+    else:
+        specs = bucket if isinstance(bucket, list) else [bucket]
+        bnames = [f"__b{i}" for i in range(len(specs))]
+        for name, b in zip(bnames, specs):
+            d = d.withColumn(name, b)
+
+    agg = F.count(F.lit(1)) if weight is None else F.sum(weight)
+    counts = d.groupBy(*part, *bnames).agg(agg.alias("__cnt"))
+    # bounded by construction: ≤ n_groups × BUCKET_TABLE_ROWS rows
+    w = (Window.partitionBy(*part) if part else Window.partitionBy(F.lit(0))).orderBy(
+        *bnames
+    )
+    off = F.sum("__cnt").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    if weight is None:
+        off = F.coalesce(off, F.lit(0))
+    cols = [*part, *bnames, off.alias("__off")]
+    if total is not None:
+        whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        cols.append(F.sum("__cnt").over(whole).alias(total))
+    offsets = counts.select(*cols)
+
+    local = Window.partitionBy(*part, *bnames).orderBy(*order)
+    if weight is None:
+        val = F.col("__off") + F.row_number().over(local)
+    else:
+        run = F.sum(weight).over(local.rowsBetween(Window.unboundedPreceding, 0))
+        val = F.when(F.col("__off").isNull() & run.isNull(), F.lit(None)).otherwise(
+            F.coalesce(F.col("__off"), F.lit(0)) + F.coalesce(run, F.lit(0))
+        )
+    return (
+        d.join(bcast(offsets), [*part, *bnames])
+        .withColumn(out, val)
+        .drop(*part, *bnames, "__off")
+    )
+
+
 def with_row_id(df: DataFrame, order_by: str | list[str], prefix_skip: int = 0) -> DataFrame:
     """Assign a dense 0-based ``row_id`` following ``order_by``, distributed.
 
@@ -190,45 +342,22 @@ def with_row_id(df: DataFrame, order_by: str | list[str], prefix_skip: int = 0) 
     beyond a #buckets-sized offset table. ``prefix_skip``: for string
     keys sharing an identical common prefix (filepaths under a base dir),
     bucket on the characters after it — otherwise everything lands in one
-    bucket (still correct, but a single window task).
+    bucket (still correct, but a single window task). The rank is
+    ``bucketed_rank`` with no group keys, bucketed on the first ordering
+    column's value (≤256 hex-prefix buckets for md5-hex keys, 4·npart
+    numeric buckets).
     """
     cols = [order_by] if isinstance(order_by, str) else list(order_by)
     first = cols[0]
-    dtype = dict(df.dtypes)[first]
-    npart = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-
-    drop_extra = ["__g", "__off"]
-    if dtype == "string":
-        bucketed = df.withColumn("__g", _string_bucket(first, prefix_skip))
+    if dict(df.dtypes)[first] == "string":
+        src, g = df, _string_bucket(first, prefix_skip)
     else:
+        npart = max(df.sparkSession.sparkContext.defaultParallelism, 1)
         src, g = _numeric_bucket(df, F.col(first), buckets=npart * 4)
-        bucketed = src.withColumn("__g", g)
-        drop_extra += ["__lo", "__hi"]
-
-    # Tiny per-bucket counts → cumulative offsets. The window runs over
-    # ≤ #distinct-buckets rows (256 for hex keys, 4·npart for numeric) —
-    # a single small task, not a data-sized stage.
-    counts = bucketed.groupBy("__g").agg(F.expr("count(1) AS __n"))
-    # explicit constant partition key: identical single-partition plan,
-    # but keeps the WindowExec no-partition warning reserved for real
-    # data-scale windows (this table is bounded by construction)
-    offsets = counts.selectExpr(
-        "__g",
-        "coalesce(sum(__n) OVER (PARTITION BY 0 ORDER BY __g "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __off",
-    )
-
-    order_sql = ", ".join(f"`{c}`" for c in cols)
     return (
-        bucketed.join(F.broadcast(offsets), "__g")
-        .withColumn(
-            ROW_ID,
-            F.expr(
-                "cast(__off + row_number() OVER "
-                f"(PARTITION BY __g ORDER BY {order_sql}) - 1 as bigint)"
-            ),
-        )
-        .drop(*drop_extra)
+        bucketed_rank(src, [], cols, ROW_ID, bucket=g)
+        .withColumn(ROW_ID, (F.col(ROW_ID) - 1).cast("bigint"))
+        .drop("__lo", "__hi")
     )
 
 

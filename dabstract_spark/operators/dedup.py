@@ -113,13 +113,8 @@ def _capped_shingle_buckets(sh: DataFrame, max_df: int | None) -> DataFrame:
 MINHASH_P = 2_147_483_647  # 2^31 - 1
 
 
-def _shingle_hash(s: Column) -> Column:
-    """md5 prefix → bigint in [0, p): the one expensive hash per unit."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint") % MINHASH_P
-
-
 def _shingle_hash_sql(s: str) -> str:
-    """SQL form of ``_shingle_hash`` (same expression tree)."""
+    """md5 prefix → bigint in [0, p): the one expensive hash per unit."""
     return f"(cast(conv(substring(md5({s}), 1, 15), 16, 10) as bigint) % {MINHASH_P})"
 
 
@@ -1096,7 +1091,8 @@ def ngram_dup_stats(
         F.size("__t") >= k
     )
     thash = tok.select(
-        F.col(id_col), F.transform(F.col("__t"), _shingle_hash).alias("__th")
+        F.col(id_col),
+        F.expr(f"transform(`__t`, s -> {_shingle_hash_sql('s')})").alias("__th"),
     )
     g = thash.select(
         F.col(id_col),

@@ -15,76 +15,39 @@ from dabstract_spark.functions.hashing import md5_order, md5_unit
 def random_subsample(df: DataFrame, ratio: float, seed: int = 0, key: str = "row_id") -> DataFrame:
     """Keep ceil(n*ratio) pseudo-random rows (reference select.py:7-24).
 
-    Exact-count semantics like the reference, fully distributed: rank the
-    md5 ordering with the same hex-prefix bucketing ``core.with_row_id``
-    uses (256 bounded per-bucket windows + a 256-row offset table), fold
-    the TOTAL count into that same offset table, and filter
-    ``rank <= ceil(n*ratio)``. No ``count()`` job, no global
-    ``orderBy().limit(k)`` — a TakeOrdered over k = a constant fraction
-    of the data would funnel the whole sample through one task at scale.
-    Same md5 order ⇒ byte-identical rows to the old sort-limit form.
+    Exact-count semantics like the reference, fully distributed: the md5
+    order's rank AND the row total come from one keyless
+    ``core.bucketed_rank`` over the md5 hex prefix (see its docstring),
+    and rows with ``rank <= ceil(n*ratio)`` survive. No ``count()`` job,
+    no global ``orderBy().limit(k)`` — a TakeOrdered over k = a constant
+    fraction of the data would funnel the whole sample through one task
+    at scale. Same md5 order ⇒ byte-identical rows to the sort-limit form.
     """
-    from dabstract_spark.core import _string_bucket
+    from dabstract_spark.core import _string_bucket, bucketed_rank
 
     ranked = df.withColumn("__rk", md5_order(key, seed))
-    bucketed = ranked.withColumn("__g", _string_bucket("__rk", 0))
-    # 256-row bucket-count table: cumulative offsets AND the grand total
-    # come from the same tiny aggregate — one extra column, zero jobs.
-    counts = bucketed.groupBy("__g").agg(F.count(F.lit(1)).alias("__n"))
-    # windows over the 256-row bucket table carry an explicit constant
-    # partition key: same single-partition plan, but the WindowExec
-    # "No Partition Defined" warning stays reserved for real data-scale
-    # regressions (this table is constant-size by construction)
-    w_off = (
-        Window.partitionBy(F.lit(0))
-        .orderBy("__g")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = (
-        Window.partitionBy(F.lit(0))
-        .orderBy("__g")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    offsets = counts.select(
-        "__g",
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__n").over(w_tot).alias("__tot"),
-    )
-    w_local = Window.partitionBy("__g").orderBy("__rk")
     return (
-        bucketed.join(F.broadcast(offsets), "__g")
-        .withColumn("__rank", F.col("__off") + F.row_number().over(w_local))
+        bucketed_rank(
+            ranked, [], ["__rk"], "__rank", bucket=_string_bucket("__rk"), total="__tot"
+        )
         .filter(F.col("__rank") <= F.ceil(F.col("__tot") * F.lit(float(ratio))))
-        .drop("__rk", "__g", "__off", "__tot", "__rank")
+        .drop("__rk", "__tot", "__rank")
     )
 
 
 def random_sample_n(df: DataFrame, n: int, seed: int = 0, key: str = "row_id") -> DataFrame:
     """Keep exactly min(n, count) pseudo-random rows — the fixed-budget
     form of ``random_subsample`` ("give me exactly 10k docs"),
-    deterministic and seed-reproducible. Same distributed machinery:
-    md5-rank via bounded per-bucket windows, filter rank <= n — no
-    count() job, no global sort-limit TakeOrdered."""
-    from dabstract_spark.core import _string_bucket
+    deterministic and seed-reproducible. Same distributed rank
+    (``core.bucketed_rank``), filter rank <= n — no count() job, no
+    global sort-limit TakeOrdered."""
+    from dabstract_spark.core import _string_bucket, bucketed_rank
 
     ranked = df.withColumn("__rk", md5_order(key, seed))
-    bucketed = ranked.withColumn("__g", _string_bucket("__rk", 0))
-    counts = bucketed.groupBy("__g").agg(F.count(F.lit(1)).alias("__n"))
-    # constant partition key on the 256-row table — see random_subsample
-    w_off = (
-        Window.partitionBy(F.lit(0))
-        .orderBy("__g")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "__g", F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off")
-    )
-    w_local = Window.partitionBy("__g").orderBy("__rk")
     return (
-        bucketed.join(F.broadcast(offsets), "__g")
-        .withColumn("__rank", F.col("__off") + F.row_number().over(w_local))
+        bucketed_rank(ranked, [], ["__rk"], "__rank", bucket=_string_bucket("__rk"))
         .filter(F.col("__rank") <= F.lit(int(n)))
-        .drop("__rk", "__g", "__off", "__rank")
+        .drop("__rk", "__rank")
     )
 
 
@@ -239,7 +202,6 @@ def token_budget_per_group(
     order_key=None,
     nulls_last: bool = False,
     n_groups_hint: int | None = None,
-    broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Quota sampling to a per-group TOKEN budget (the corpus-curation
     step after quality ranking: "take the best docs per domain until the
@@ -261,35 +223,22 @@ def token_budget_per_group(
     sort places NULLs last (Spark's descending default), or the NULL
     rows' cumsum would be computed against the wrong prefix.
 
-    Scale shape — the two-level prefix-sum discipline
-    (``packing.block_prefix_sum`` / ``grouped_rank_ppm``): rows land in
-    256 per-group VALUE-RANGE buckets of ``order_key`` (ranges of the
-    group's order, so bucket b wholly precedes bucket b+1); per-(group,
-    bucket) token sums fold into an offsets table of <= n_groups x 256
-    rows whose cumulative window is bounded by construction; each row's
-    inclusive cumsum = its bucket's offset + a bucket-local running sum.
-    No window ever holds a whole group — one dominant domain in a 100 TB
-    mixture spreads over 256 tasks instead of serializing into one
-    external sort. Bucket boundaries come from a per-group min/max
-    aggregate (map-side combined to n_groups rows, no driver job), so
-    the bucketing is deterministic and the result is byte-identical to
-    the naive per-group window cumsum under a total order — including
-    NULL token values: the cumsum is NULL (row dropped) exactly when
-    the row's whole inclusive prefix is NULL, and a row whose
-    bucket-local prefix is all-NULL still inherits earlier buckets'
-    non-NULL offset (the offsets table keeps NULL, not 0, for an
-    all-NULL earlier prefix). Caveat: the
+    Scale shape: the weighted ``core.bucketed_rank`` (see its docstring)
+    over 256 per-group VALUE-RANGE buckets of ``order_key`` — each row's
+    inclusive cumsum is its bucket's offset plus a bucket-local running
+    sum, so one dominant domain in a 100 TB mixture spreads over 256
+    tasks instead of serializing into one external sort. Byte-identical
+    to the naive per-group window cumsum under a total order, NULL
+    tokens and NULL groups included: the cumsum is NULL (row dropped)
+    exactly when the row's whole inclusive prefix is NULL. Caveat: the
     buckets inherit the KEY distribution — a group whose order key is
     one constant degenerates to one bucket (ties are unorderable anyway
-    without the tiebreaker). The two n_groups×256-bounded side tables
-    broadcast only when known to fit: pass ``n_groups_hint`` (an upper
-    bound on group cardinality, zero extra jobs — q130 passes one) when
-    you know it; hint-less callers get plain joins and AQE converts
-    them to broadcast at runtime when the side is actually small, so a
-    per-URL-host caller never builds a 2.5e9-row driver broadcast (the
-    ``grouped_rank_ppm`` guard, without its eager count job).
+    without the tiebreaker). ``n_groups_hint`` (an upper bound on group
+    cardinality — q130 passes one) lets the side tables broadcast
+    statically; hint-less callers get plain joins AQE converts at
+    runtime.
     """
-    from pyspark.sql import Window
+    from dabstract_spark.core import bucketed_rank
 
     tok = (F.col(token_col) if isinstance(token_col, str) else token_col).cast(
         "bigint"
@@ -322,96 +271,17 @@ def token_budget_per_group(
             "— pass an explicit order_key= monotone along order_cols"
         )
 
-    if n_groups_hint is not None:
-        small = int(n_groups_hint) * 256 <= broadcast_threshold
-        maybe_bcast = F.broadcast if small else (lambda d: d)
-    else:
-        # no hint: leave the join strategy to AQE — it broadcasts at
-        # runtime when the side table is actually small, with no
-        # plan-build count job and no driver bomb when it is not
-        maybe_bcast = lambda d: d  # noqa: E731
-
-    keyed = df.withColumn("__k", k)
-    # per-group key range: one map-side-combined aggregate, n_groups rows
-    stats = keyed.groupBy(group_col).agg(
-        F.min("__k").alias("__kmin"), F.max("__k").alias("__kmax")
+    out = bucketed_rank(
+        df,
+        [group_col],
+        order_cols,
+        cum_col,
+        value_range=k,
+        nulls_last=nulls_last,
+        weight=tok,
+        n_groups_hint=n_groups_hint,
     )
-    span = F.col("__kmax") - F.col("__kmin")
-    # floor of a monotone map of __k -> monotone bucket; equal keys share
-    # a bucket, __k == __kmax clamps from 256 back to 255. NULL keys sort
-    # outside the min/max range: bucket -1 (NULLS FIRST, Spark's
-    # ascending default) or 256 (NULLS LAST, the descending default) —
-    # F.least/greatest skip NULLs, so without the explicit branch a NULL
-    # key would silently land in bucket 255.
-    null_bucket = F.lit(256 if nulls_last else -1)
-    bucket = (
-        F.when(F.col("__k").isNull(), null_bucket)
-        .when(span <= 0, F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(255),
-                F.floor((F.col("__k") - F.col("__kmin")) * 256.0 / span).cast(
-                    "int"
-                ),
-            )
-        )
-    )
-    # null-safe group joins: a NULL group value is a real window
-    # partition in the naive form, so it must match its own stats /
-    # offsets row here too (plain equi-join would drop it)
-    st = stats.withColumnRenamed(group_col, "__g")
-    bucketed = (
-        keyed.join(
-            maybe_bcast(st), F.col(group_col).eqNullSafe(F.col("__g"))
-        )
-        .withColumn("__b", bucket)
-        .drop("__g", "__kmin", "__kmax")
-    )
-
-    sums = bucketed.groupBy(group_col, "__b").agg(
-        F.sum(tok).alias("__t")
-    )
-    # bounded by construction: <= n_groups x 257 rows
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # __off stays NULL (not coalesced) when NO earlier bucket holds a
-    # non-NULL token — sum-over-window and the per-bucket groupBy sum
-    # both skip NULLs, so "__off is NULL" == "the whole earlier prefix
-    # is NULL", exactly the naive window's state
-    offsets = sums.select(
-        F.col(group_col).alias("__g"),
-        F.col("__b").alias("__ob"),
-        F.sum("__t").over(w_off).alias("__off"),
-    )
-    # bucket-local running sum: each task holds <= 1/256 of one group
-    w_loc = (
-        Window.partitionBy(group_col, "__b")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # NULL-token semantics, byte-identical to the naive cumsum: the
-    # naive sum is NULL iff the row's ENTIRE inclusive prefix is NULL
-    # (and the row is then filtered out, NULL <= budget); a row whose
-    # bucket-local prefix is all-NULL but whose earlier buckets carry a
-    # non-NULL sum must still get those buckets' offset — so coalesce
-    # each leg only when at least one leg is non-NULL
-    loc = F.sum(tok).over(w_loc)
-    cum = F.when(
-        F.col("__off").isNull() & loc.isNull(), F.lit(None).cast("bigint")
-    ).otherwise(F.coalesce(F.col("__off"), F.lit(0)) + F.coalesce(loc, F.lit(0)))
-    return (
-        bucketed.join(
-            maybe_bcast(offsets),
-            F.col(group_col).eqNullSafe(F.col("__g"))
-            & (F.col("__b") == F.col("__ob")),
-        )
-        .withColumn(cum_col, cum)
-        .filter(F.col(cum_col) <= budget)
-        .drop("__k", "__b", "__g", "__ob", "__off")
-    )
+    return out.filter(F.col(cum_col) <= budget)
 
 
 def top_k_per_group(
@@ -421,15 +291,11 @@ def top_k_per_group(
     per domain"). ``order_cols`` must end with a unique tiebreaker so
     the result is deterministic and replayable.
 
-    Two-level rank (``curriculum_order``'s composite-bucket discipline):
-    rank within (group, 256-way deterministic hash bucket) first and
-    keep each bucket's top k — a row in the true per-group top k is in
-    its bucket's top k a fortiori — then merge the ≤ 256·k survivors per
-    group with one second rank over that bounded set. A dominant group
-    (one domain owning most of a 100 TB corpus) never lands in a single
-    task's sort. The bucket key is xxhash64 over the row's hashable
-    columns — it only routes rows, it never orders them, so the output
-    is identical to the single-window form under a total order.
+    Routed through ``two_level_keep_k`` with a 256-way xxhash64 bucket
+    over the row's hashable columns — it only routes rows, it never
+    orders them, so the output is identical to the single-window form
+    under a total order, and a dominant group (one domain owning most of
+    a 100 TB corpus) never lands in a single task's sort.
     """
     def _has_map(dt) -> bool:
         # xxhash64 rejects MapType RECURSIVELY (map nested in
@@ -451,20 +317,7 @@ def top_k_per_group(
         if hashable
         else F.lit(0)
     )
-    bucketed = df.withColumn("__b", bucket)
-    w1 = Window.partitionBy(*group_cols, "__b").orderBy(*order_cols)
-    pruned = (
-        bucketed.withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn", "__b")
-    )
-    # bounded by construction: ≤ 256·k rows per group reach this window
-    w2 = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return (
-        pruned.withColumn("__rn", F.row_number().over(w2))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return two_level_keep_k(df, tuple(group_cols), order_cols, bucket, k)
 
 
 def importance_sample(
@@ -508,13 +361,13 @@ def training_order(
     assignment — the "globally shuffle the corpus, then write shard
     files" step in front of sequence packing / export.
 
-    Distributed end to end: the md5 key range-buckets into 256 groups
-    (`with_row_id`'s hex-prefix buckets), positions come from the
-    broadcast bucket-offset table, and no global window or driver-side
-    count is involved. Round-robin ``pos % n_shards`` gives shards that
-    are balanced to ±1 row BY CONSTRUCTION — a hash-mod shard (pos-free)
-    would be only statistically balanced, and a range shard would put
-    adjacent positions in one shard, defeating intra-shard diversity.
+    Distributed end to end: positions are ``with_row_id``'s keyless
+    ``core.bucketed_rank`` over the md5 hex prefix — no global window
+    or driver-side count is involved. Round-robin ``pos % n_shards``
+    gives shards that are balanced to ±1 row BY CONSTRUCTION — a
+    hash-mod shard (pos-free) would be only statistically balanced, and
+    a range shard would put adjacent positions in one shard, defeating
+    intra-shard diversity.
 
     ``pos``/``shard`` are ATTACHED: every input column — including a
     ``row_id`` identity column, even when it is the shuffle key —
@@ -598,37 +451,27 @@ def curriculum_order(
 
     ``with_row_id`` can't be used directly here: it range-buckets on the
     FIRST sort column, and a curriculum has only a handful of stages, so
-    each window task would hold an entire stage. Instead the bucket key
-    is COMPOSITE — (stage, 256-way md5-hex prefix of the shuffle key) —
-    which keeps the broadcast offset table tiny (n_stages × 256 rows)
-    while bounding every local window at ~1/256 of one stage. Same
-    discipline at 100 TB: no data-sized window, no count() job, offsets
-    move as one broadcast.
+    each window task would hold an entire stage. Instead the keyless
+    ``core.bucketed_rank`` buckets on the COMPOSITE (stage, 256-way
+    md5-hex prefix of the shuffle key): an n_stages × 256 offsets table,
+    and every local window holds ~1/256 of one stage. A NULL stage
+    orders first (Spark's ascending NULLS FIRST) and so does a NULL
+    key's NULL md5 within its stage: the stage travels as a struct,
+    whose equality matches NULL, and a NULL prefix as bucket -1, so no
+    row loses its position.
     """
+    from dabstract_spark.core import bucketed_rank
+
     taken = {"pos"} | ({"shard"} if n_shards is not None else set())
     clash = sorted(taken & set(df.columns))
     if clash:
         raise ValueError(f"curriculum_order would overwrite existing column(s) {clash}")
-    keyed = df.withColumn("__shuf", md5_order(key, seed)).withColumn(
-        "__b", F.conv(F.substring("__shuf", 1, 2), 16, 10).cast("int")
-    )
-    counts = keyed.groupBy(stage, "__b").agg(F.count(F.lit(1)).alias("__n"))
-    # bounded by construction: n_stages × 256 rows
-    w = (
-        Window.partitionBy(F.lit(0))
-        .orderBy(stage, "__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        stage, "__b", F.coalesce(F.sum("__n").over(w), F.lit(0)).alias("__off")
-    )
-    w_local = Window.partitionBy(stage, "__b").orderBy("__shuf", key)
+    keyed = df.withColumn("__shuf", md5_order(key, seed))
+    prefix = F.coalesce(F.conv(F.substring("__shuf", 1, 2), 16, 10).cast("int"), F.lit(-1))
     out = (
-        keyed.join(F.broadcast(offsets), [stage, "__b"])
-        .withColumn(
-            "pos", (F.col("__off") + F.row_number().over(w_local) - 1).cast("bigint")
-        )
-        .drop("__shuf", "__b", "__off")
+        bucketed_rank(keyed, [], ["__shuf", key], "pos", bucket=[F.struct(stage), prefix])
+        .withColumn("pos", (F.col("pos") - 1).cast("bigint"))
+        .drop("__shuf")
     )
     if n_shards is not None:
         out = out.withColumn("shard", (F.col("pos") % n_shards).cast("int"))
@@ -768,7 +611,6 @@ def grouped_rank_ppm(
     out_rank: str = "rank_in_group",
     out_pct: str = "pct_ppm",
     n_groups_hint: int | None = None,
-    broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
     """EXACT per-group rank and percentile of an integer score WITHOUT a
     group-sized window — per-source quality calibration (the CCNet move:
@@ -778,85 +620,39 @@ def grouped_rank_ppm(
     Rank 1 = lowest score; ``pct_ppm = (rank-1)·10⁶ div (n_group-1)``
     (0 for the group's minimum, 10⁶ for its maximum; single-row groups
     get 0). Ties break by ``id_col`` so the rank is total and
-    reproducible.
+    reproducible. A NULL group is a real group ("unknown"
+    language/domain); NULL scores rank before score 0 (the oracle twin
+    is ORDER BY score NULLS FIRST).
 
-    Scale shape — the composite-bucket offset discipline
-    (``curriculum_order``): scores live in [0, max_score], so 256
-    fixed-width VALUE buckets (``score div ceil(max_score/256)``) are
-    ranges of the global order; per-(group, bucket) counts fold into a
-    broadcast cumulative-offset table (n_groups×256 rows) carrying the
-    group totals, and each row's rank = its bucket's offset + a local
-    row_number bounded by the bucket. No window ever holds a whole
-    group, no count() job, offsets move as one broadcast.
+    Scale shape: ``core.bucketed_rank`` (see its docstring) with the
+    group total. Scores live in [0, max_score], so 256 fixed-width VALUE
+    buckets (``score div ceil(max_score/256)``; NULL lands in bucket 0)
+    are ranges of the group's order. ``n_groups_hint`` (an upper bound
+    on group cardinality) lets the offsets table broadcast statically;
+    hint-less callers get a plain join AQE decides at runtime, whose
+    exchange the bucket-local window reuses."""
+    from dabstract_spark.core import bucketed_rank
 
-    Broadcast bound: the offsets table is <= n_groups x 256 rows, fine
-    for the stated use (languages/domains, 10^2-10^3 groups) but a
-    driver bomb for a high-cardinality group column (per-URL-host over
-    the open web: 10^7 groups -> 2.5e9 broadcast rows). The join
-    therefore broadcasts statically ONLY when the offsets table is
-    known to fit: pass ``n_groups_hint`` (an upper bound on group
-    cardinality; hint x 256 vs ``broadcast_threshold``, zero extra
-    jobs) when you know it. Hint-less callers get a plain join and AQE
-    decides at runtime from the aggregate's real size — no plan-build
-    count job (an eager count would fire a full input scan as a
-    DataFrame-construction side effect AND scan the input twice on
-    execution), and past the threshold the shuffle join's exchange is
-    reused by the bucket-local window that follows on the same keys."""
     width = max(1, -(-int(max_score) // 256))  # ceil division
-    # null-safe internal group key: a NULL group is a REAL group
-    # ("unknown" language/domain) but a plain name equi-join would drop
-    # it — and struct equality with a NULL field is NULL, so the key is
-    # (is-null flag, coalesced string form). NULL scores land in bucket
-    # 0 (Spark greatest ignores NULLs) and rank BEFORE score 0 — the
-    # oracle twin is ORDER BY score NULLS FIRST.
-    gk = F.struct(
-        F.col(group_col).isNull().alias("n"),
-        F.coalesce(F.col(group_col).cast("string"), F.lit("")).alias("v"),
+    bucket = F.least(
+        F.lit(255), F.greatest(F.lit(0), (F.col(score_col) / width).cast("int"))
     )
-    keyed = df.withColumn("__gk", gk).withColumn(
-        "__b",
-        F.least(
-            F.lit(255), F.greatest(F.lit(0), (F.col(score_col) / width).cast("int"))
+    ranked = bucketed_rank(
+        df,
+        [group_col],
+        [score_col, id_col],
+        out_rank,
+        bucket=bucket,
+        total="__ng",
+        n_groups_hint=n_groups_hint,
+    )
+    return ranked.withColumn(
+        out_pct,
+        F.expr(
+            f"CAST((CAST({out_rank} - 1 AS DECIMAL(38,0)) * 1000000)"
+            " div CAST(greatest(__ng - 1, 1) AS DECIMAL(38,0)) AS BIGINT)"
         ),
-    )
-    counts = keyed.groupBy("__gk", "__b").agg(F.count(F.lit(1)).alias("__n"))
-    # bounded by construction: n_groups × 256 rows
-    w_off = (
-        Window.partitionBy("__gk")
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = (
-        Window.partitionBy("__gk")
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    offsets = counts.select(
-        "__gk",
-        "__b",
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__n").over(w_tot).alias("__ng"),
-    )
-    small = (
-        n_groups_hint is not None
-        and int(n_groups_hint) * 256 <= broadcast_threshold
-    )
-    w_local = Window.partitionBy("__gk", "__b").orderBy(score_col, id_col)
-    return (
-        keyed.join(F.broadcast(offsets) if small else offsets, ["__gk", "__b"])
-        .withColumn(
-            out_rank,
-            (F.col("__off") + F.row_number().over(w_local)).cast("bigint"),
-        )
-        .withColumn(
-            out_pct,
-            F.expr(
-                f"CAST((CAST({out_rank} - 1 AS DECIMAL(38,0)) * 1000000)"
-                " div CAST(greatest(__ng - 1, 1) AS DECIMAL(38,0)) AS BIGINT)"
-            ),
-        )
-        .drop("__gk", "__b", "__off", "__ng")
-    )
+    ).drop("__ng")
 
 
 _REGISTRY["grouped_rank_ppm"] = grouped_rank_ppm
@@ -869,7 +665,6 @@ def grouped_weighted_quantiles(
     weight_col: str,
     quantiles: list[tuple[str, int, int]],
     n_groups_hint: int | None = None,
-    broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
     """EXACT per-group weighted quantile vector WITHOUT a group-sized
     window — the latency-dashboard / weighted-median selection form.
@@ -884,35 +679,33 @@ def grouped_weighted_quantiles(
     only, so the exact quantile is engine-identical (p50 is ``(name,
     1, 2)``; a p95 is ``(name, 95, 100)``). Returns one row per group.
 
-    Scale shape — the two-level value-range-bucket prefix sum
-    (``token_budget_per_group`` / ``grouped_rank_ppm``): a per-group
-    min/max aggregate (map-side combined, n_groups rows) fixes 256
-    VALUE-RANGE buckets that are ranges of the group's order; per-
-    (group, bucket) weight sums fold into a bounded offsets table
-    (<= n_groups×257 rows, carrying the group totals) whose own
-    cumulative window is bounded by construction; each distinct value's
-    inclusive cum = its bucket's offset + a bucket-local running sum,
-    so no window ever holds a whole group's distinct-value table — the
-    continuous-value case (distinct count ~ group rows) spreads one
-    dominant group over 256 tasks instead of serializing its sort-and-
-    stream into one straggler (a cumsum EMITS every row: no
-    WindowGroupLimit pruning saves the naive form). The boundary pick
-    is one per-group MIN aggregate per requested quantile. Byte-
-    identical to the naive ``Window.partitionBy(group).orderBy(value)``
-    cumsum: bucket assignment is a monotone map of the value (double
-    cast of a numeric/decimal is order-preserving; equal values share a
-    bucket and (group, value) rows are unique by contract, so the
-    bucket-local ``orderBy(value)`` is total). A NULL value buckets
+    Scale shape: ``cum`` is the weighted ``core.bucketed_rank`` (see its
+    docstring) over 256 per-group VALUE-RANGE buckets, with the group
+    total — no window ever holds a whole group's distinct-value table,
+    so the continuous-value case (distinct count ~ group rows) spreads
+    one dominant group over 256 tasks (a cumsum EMITS every row: no
+    WindowGroupLimit pruning saves the naive form). Its own part is
+    boundary-bucket pruning of the offsets table (below), so the
+    bucket-local cumsum touches ≤ k+2 buckets per group; the boundary
+    pick is one per-group MIN aggregate per requested quantile.
+    Byte-identical to the naive ``Window.partitionBy(group)
+    .orderBy(value)`` cumsum ((group, value) rows are unique by
+    contract, so the bucket-local order is total). A NULL value buckets
     before every non-NULL one (Spark's ascending NULLS FIRST) and can
     never be picked (``CASE WHEN ... THEN NULL`` loses every MIN) —
     callers needing DuckDB-oracle parity should feed non-NULL values
     (DuckDB windows order NULLS LAST).
 
-    Broadcast bound: the ``grouped_rank_ppm`` guard — the two bounded
-    side tables broadcast statically only when ``n_groups_hint``×257
-    fits ``broadcast_threshold``; hint-less callers get plain joins AQE
-    converts at runtime, no plan-build count job, no driver bomb on a
-    high-cardinality group column."""
+    The discipline is spelled out here rather than called: through the
+    helper, the pruning windows would run on the offsets table's own
+    partitioning and drop one shuffle from the recorded plan shape of
+    every caller (q194, q203, q229, q289, q298), so this function keeps
+    its own spelling until ``tests/fixtures/plan_inventory.json`` is
+    next regenerated. The side tables broadcast statically under
+    ``core.hinted_broadcast``; hint-less callers get plain joins AQE
+    converts at runtime."""
+    from dabstract_spark.core import BUCKET_TABLE_ROWS, hinted_broadcast
+
     vtype = counts.schema[value_col].dataType.simpleString()
     if not (
         vtype in ("tinyint", "smallint", "int", "bigint", "float", "double")
@@ -924,11 +717,7 @@ def grouped_weighted_quantiles(
             "numerically while the cumsum orders it lexicographically)"
         )
 
-    if n_groups_hint is not None:
-        small = int(n_groups_hint) * 257 <= broadcast_threshold
-        maybe_bcast = F.broadcast if small else (lambda d: d)
-    else:
-        maybe_bcast = lambda d: d  # noqa: E731
+    maybe_bcast = hinted_broadcast(n_groups_hint, BUCKET_TABLE_ROWS)
 
     # one-parse composers (r12 chatter cut): the Column-by-Column form
     # of this function cost ~420 py4j round trips per call (×2 per
@@ -1028,7 +817,6 @@ def grouped_order_stats(
     id_col: str,
     ntiles: int | None = None,
     n_groups_hint: int | None = None,
-    broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Per-row rank / group size (and optional exact ntile) over an
     ARBITRARY numeric order key WITHOUT a group-sized window — the
@@ -1045,19 +833,14 @@ def grouped_order_stats(
     ``ntiles`` is set (the exact SQL NTILE allotment: the first
     n mod k tiles take ceil(n/k) rows).
 
-    Scale shape — ``grouped_weighted_quantiles``' per-group min/max →
-    256 VALUE-RANGE buckets (monotone in the value, so bucket-local
-    (value, id) order concatenated across buckets is the group order);
-    per-(group, bucket) counts fold into a bounded offsets table
-    (<= n_groups×257 rows) and each row's rank = bucket offset + a
-    bucket-local row_number bounded by 1/256 of the group. Unlike
+    Scale shape: ``core.bucketed_rank`` (see its docstring) over 256
+    per-group VALUE-RANGE buckets, with the group total. Unlike
     ``grouped_rank_ppm`` (fixed-width buckets over a declared
-    [0, max_score]) the key may be any numeric/decimal/date-ordinal
-    column with unknown range or sign. NULL values bucket first
-    (Spark ascending NULLS FIRST — same as the naive window's order).
-    Broadcast gating follows the ``grouped_rank_ppm`` guard: static
-    broadcast only under ``n_groups_hint``×257 <= threshold, hint-less
-    callers get plain joins AQE converts at runtime."""
+    [0, max_score]) the key may be any numeric/decimal column with
+    unknown range or sign. NULL values bucket first (Spark ascending
+    NULLS FIRST — same as the naive window's order)."""
+    from dabstract_spark.core import bucketed_rank
+
     vtype = df.schema[value_col].dataType.simpleString()
     if not (
         vtype in ("tinyint", "smallint", "int", "bigint", "float", "double")
@@ -1068,66 +851,18 @@ def grouped_order_stats(
             "numeric/decimal (bucket assignment must be monotone in the "
             "window order)"
         )
-    keyed = df.withColumn("__k", F.col(value_col).cast("double"))
-    stats = keyed.groupBy(group_col).agg(
-        F.min("__k").alias("__kmin"), F.max("__k").alias("__kmax")
-    )
-    span = F.col("__kmax") - F.col("__kmin")
-    bucket = (
-        F.when(F.col("__k").isNull(), F.lit(-1))
-        .when(span <= 0, F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(255),
-                F.floor((F.col("__k") - F.col("__kmin")) * 256.0 / span).cast(
-                    "int"
-                ),
-            )
-        )
-    )
-    if n_groups_hint is not None:
-        small = int(n_groups_hint) * 257 <= broadcast_threshold
-        maybe_bcast = F.broadcast if small else (lambda d: d)
-    else:
-        maybe_bcast = lambda d: d  # noqa: E731
-    st = stats.withColumnRenamed(group_col, "__g")
-    bucketed = (
-        keyed.join(maybe_bcast(st), F.col(group_col).eqNullSafe(F.col("__g")))
-        .withColumn("__b", bucket)
-        .drop("__g", "__kmin", "__kmax")
-    )
-    counts = bucketed.groupBy(group_col, "__b").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_tot = (
-        Window.partitionBy(group_col)
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    offsets = counts.select(
-        F.col(group_col).alias("__og"),
-        F.col("__b").alias("__ob"),
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("__n").over(w_tot).alias("__ng"),
-    )
-    w_local = Window.partitionBy(group_col, "__b").orderBy(value_col, id_col)
     out = (
-        bucketed.join(
-            maybe_bcast(offsets),
-            F.col(group_col).eqNullSafe(F.col("__og"))
-            & (F.col("__b") == F.col("__ob")),
-        )
-        .withColumn(
+        bucketed_rank(
+            df,
+            [group_col],
+            [value_col, id_col],
             "rank_in_group",
-            (F.col("__off") + F.row_number().over(w_local)).cast("bigint"),
+            value_range=F.col(value_col),
+            total="__ng",
+            n_groups_hint=n_groups_hint,
         )
         .withColumn("n_group", F.col("__ng").cast("bigint"))
-        .drop("__k", "__b", "__og", "__ob", "__off", "__ng")
+        .drop("__ng")
     )
     if ntiles is not None:
         k = int(ntiles)
@@ -1262,7 +997,7 @@ def grouped_mad_outliers(
     group-sized window anywhere, including for continuous values whose
     distinct count ~ group rows. The median/MAD tables are n_groups
     rows; they join back broadcast when ``n_groups_hint`` says they
-    fit (the ``grouped_rank_ppm`` guard), plain AQE-convertible joins
+    fit (``core.hinted_broadcast``), plain AQE-convertible joins
     otherwise. The collapsed (group, value) table and both derived
     pass inputs are lineage-truncated with lazy ``localCheckpoint``
     (the pagerank/BPE discipline): composing two quantile passes
@@ -1314,6 +1049,8 @@ def _mad_internals(df, group_col, value_col, n_groups_hint):
     docstring above). Returns (cvm = counts joined with medians +
     deviations, median table keyed ``__gm``, mad table keyed ``__gd``,
     broadcast gate)."""
+    from dabstract_spark.core import BUCKET_TABLE_ROWS, hinted_broadcast
+
     vals = df.filter(F.col(value_col).isNotNull()).select(
         F.col(group_col).alias("__grp"), F.col(value_col).alias("__v")
     )
@@ -1322,10 +1059,7 @@ def _mad_internals(df, group_col, value_col, n_groups_hint):
         .agg(F.count(F.lit(1)).alias("__w"))
         .localCheckpoint(eager=False)
     )
-    if n_groups_hint is not None and int(n_groups_hint) * 257 <= 1_000_000:
-        maybe_bcast = F.broadcast
-    else:
-        maybe_bcast = lambda d: d  # noqa: E731
+    maybe_bcast = hinted_broadcast(n_groups_hint, BUCKET_TABLE_ROWS)
     med = (
         grouped_weighted_quantiles(
             cv, "__grp", "__v", "__w", [("median", 1, 2)], n_groups_hint=n_groups_hint
@@ -1450,8 +1184,8 @@ def weighted_sample_n(
     streaming twin collapses them by key.
 
     Scale shape: the global top-n by e routes through
-    ``token_budget_per_group``'s two-level 256-value-range-bucket
-    machinery (tok = 1, budget = n, one constant group) — no
+    ``token_budget_per_group`` (tok = 1, budget = n, one constant
+    group; the weighted ``core.bucketed_rank``) — no
     single-task corpus sort, no TakeOrdered with a data-scale limit;
     the "one giant group" case is exactly what that machinery de-skews.
     Returns the selected rows' (key, weight, sample_rank)."""

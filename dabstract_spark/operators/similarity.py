@@ -109,28 +109,18 @@ def _hyperplane_signs(n_bits: int, dim: int, seed: int) -> list[list[float]]:
     ]
 
 
-def hyperplane_bits(vec_col: Column | str, n_bits: int = 8, dim: int = 64, seed: int = 0) -> Column:
+def hyperplane_bits(vec_col: str, n_bits: int = 8, dim: int = 64, seed: int = 0) -> Column:
     """Random-hyperplane sign sketch: bit_i = [ sum_j vec[j] * sign_ij > 0 ]
     with the ±1 sign matrix md5-derived (deterministic, engine-portable)
-    but materialized as literal arrays at plan-build time."""
-    signs = _hyperplane_signs(n_bits, dim, seed)
-    if isinstance(vec_col, str):
-        # One F.expr parse of the whole unrolled expression: building the
-        # 512-node tree Column-by-Column costs thousands of py4j round
-        # trips (~5 s of pure driver time per call), and the HOF form
-        # (zip_with+aggregate) runs interpreted per row. The ±1 signs
-        # fold into exact +/- and the left-associated j-ascending sum is
-        # bit-identical to both alternatives (and to the DuckDB oracle).
-        return F.expr(_hyperplane_bits_sql(vec_col, signs))
-    v = vec_col
-    acc = F.lit(0).cast("bigint")
-    for i in range(n_bits):
-        proj = F.lit(0.0)
-        for j in range(dim):
-            term = F.element_at(v, j + 1).cast("double")
-            proj = proj + (term if signs[i][j] > 0 else -term)
-        acc = acc + (proj > 0).cast("bigint") * F.lit(2**i).cast("bigint")
-    return acc
+    but materialized as literal arrays at plan-build time.
+
+    One F.expr parse of the whole unrolled expression: building the
+    512-node tree Column-by-Column costs thousands of py4j round trips
+    (~5 s of pure driver time per call), and the HOF form
+    (zip_with+aggregate) runs interpreted per row. The ±1 signs fold
+    into exact +/- and the left-associated j-ascending sum is
+    bit-identical to the DuckDB oracle."""
+    return F.expr(_hyperplane_bits_sql(vec_col, _hyperplane_signs(n_bits, dim, seed)))
 
 
 def _hyperplane_bits_sql(col: str, signs) -> str:

@@ -198,7 +198,6 @@ def oov_scores(
     vocab_df: DataFrame,
     vocab_unique: bool = False,
     vocab_size_hint: int | None = None,
-    broadcast_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Per-``key_col`` OOV aggregate against a fixed (term) vocabulary —
     the ONE scoring recipe shared by the batch screen (``vocab_oov``,
@@ -212,10 +211,12 @@ def oov_scores(
     deduplicated unless the caller vouches with ``vocab_unique=True``
     (``vocab_top_k`` output is distinct by construction — skipping the
     redundant shuffle). The static broadcast is gated on
-    ``vocab_size_hint`` (the ``grouped_rank_ppm`` guard): hint-less or
+    ``vocab_size_hint`` (``core.hinted_broadcast``): hint-less or
     over-threshold vocabularies get a plain join AQE converts at
     runtime — an unbounded caller-supplied vocabulary is never an
     unguarded driver broadcast."""
+    from dabstract_spark.core import hinted_broadcast
+
     toks = df.select(
         F.col(key_col), F.explode(tokens(text_col)).alias("term")
     )
@@ -223,8 +224,7 @@ def oov_scores(
     if not vocab_unique:
         vocab = vocab.dropDuplicates(["term"])
     vocab = vocab.select("term", F.lit(1).alias("__in_vocab"))
-    if vocab_size_hint is not None and int(vocab_size_hint) <= broadcast_threshold:
-        vocab = F.broadcast(vocab)
+    vocab = hinted_broadcast(vocab_size_hint)(vocab)
     oov = "CAST(__in_vocab IS NULL AS BIGINT)"
     return (
         toks.join(vocab, "term", "left")

@@ -114,6 +114,8 @@ def session_agg_stream(
     per closed session with the same stats as events.session_stats
     (session identity is the window itself rather than an ordinal id —
     the streaming-native formulation)."""
+    from dabstract_spark.operators.events import _epoch_us_sql
+
     return (
         events.withWatermark(ts_col, watermark)
         .groupBy(
@@ -122,11 +124,10 @@ def session_agg_stream(
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            # unix_micros rejects TIMESTAMP_NTZ (naive parquet timestamps);
-            # the cast is a uniform shift that cancels in the difference
+            # epoch micros of TIMESTAMP or TIMESTAMP_NTZ input (events._epoch_us)
             F.expr(
-                f"(max(unix_micros(cast({ts_col} as timestamp)))"
-                f" - min(unix_micros(cast({ts_col} as timestamp)))) div 1000000"
+                f"(max({_epoch_us_sql(ts_col)}) - min({_epoch_us_sql(ts_col)}))"
+                " div 1000000"
             ).alias("duration_sec"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
@@ -249,21 +250,21 @@ def _drain(spark, start_query, timeout_sec: int, drain_partitions: int, label: s
     bounded drain: every stateful operator spins one state store PER
     shuffle partition PER micro-batch, pure overhead on a fixture-sized
     backlog. The conf binds at query start, so it is set for the drain
-    and restored right after. awaitTermination returns False on timeout
-    — reading a sink then would yield a nondeterministic partial result
-    (or a path-not-found if no micro-batch committed); stop and raise
-    instead. Returns the terminated StreamingQuery so callers can
-    inspect its progress."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(drain_partitions))
-    try:
+    and restored right after (``core.conf_override``: a key that was
+    unset before the drain is unset after it). awaitTermination returns
+    False on timeout — reading a sink then would yield a
+    nondeterministic partial result (or a path-not-found if no
+    micro-batch committed); stop and raise instead. Returns the
+    terminated StreamingQuery so callers can inspect its progress."""
+    from dabstract_spark.core import conf_override
+
+    drain_conf = {"spark.sql.shuffle.partitions": str(drain_partitions)}
+    with conf_override(spark, drain_conf):
         q = start_query()
         if not q.awaitTermination(timeout_sec):
             q.stop()
             raise TimeoutError(f"{label} drain exceeded {timeout_sec}s")
         return q
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _drain_foreach_batch(

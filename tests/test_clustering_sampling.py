@@ -617,8 +617,8 @@ def test_grouped_rank_ppm_matches_naive_window(spark):
 
 
 def test_grouped_rank_ppm_high_cardinality_shuffle_path(spark):
-    """Past broadcast_threshold the offsets join must fall back to a
-    plain shuffle join (no driver-side broadcast of an n_groups x 256
+    """Without a group-count hint the offsets join must fall back to a
+    plain shuffle join (no driver-side broadcast of an n_groups x 257
     table) with IDENTICAL output — the high-cardinality-group guard
     (per-URL-host calibration over the open web)."""
     from dabstract_spark.operators.select import grouped_rank_ppm
@@ -628,7 +628,7 @@ def test_grouped_rank_ppm_high_cardinality_shuffle_path(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, grp string, qp bigint")
 
     broad = grouped_rank_ppm(df, "grp", "qp", "doc_id", n_groups_hint=40)
-    shuf = grouped_rank_ppm(df, "grp", "qp", "doc_id", broadcast_threshold=1)
+    shuf = grouped_rank_ppm(df, "grp", "qp", "doc_id")
     assert "ResolvedHint" not in shuf._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" in broad._jdf.queryExecution().analyzed().toString()
     want = sorted(map(tuple, broad.collect()))

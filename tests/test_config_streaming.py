@@ -628,3 +628,24 @@ def test_rollup_partials_replayed_batch_collapses(spark, tmp_path):
         key=str,
     )
     assert nm != bm
+
+
+def test_run_to_memory_leaves_unset_shuffle_partitions_unset(spark):
+    """A drain right-sizes ``spark.sql.shuffle.partitions`` for its own
+    run only: a key that was unset before the drain is unset after it
+    (not pinned to its read-back default), and a set key gets its own
+    value back."""
+    k = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(k, None)
+    try:
+        spark.conf.unset(k)
+        run_to_memory(_events_stream(spark).select("event_id"))
+        assert spark.conf.get(k, None) is None
+        spark.conf.set(k, "5")
+        run_to_memory(_events_stream(spark).select("event_id"))
+        assert spark.conf.get(k) == "5"
+    finally:
+        if saved is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, saved)

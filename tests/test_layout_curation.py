@@ -821,6 +821,29 @@ def test_curriculum_order_stage_major_md5_within(spark):
         curriculum_order(df.withColumn("pos", F.lit(0)), "stage", "id")
 
 
+def test_curriculum_order_keeps_null_stage_and_null_key_rows(spark):
+    """A row with a NULL stage or a NULL key keeps a position, and the
+    positions stay a dense 0..n-1 bijection equal to the naive
+    ``row_number() OVER (ORDER BY stage, md5(seed:key), key) - 1``: a
+    NULL stage sorts first (Spark's ascending NULLS FIRST), and so does
+    a NULL key's NULL md5 within its stage."""
+    from pyspark.sql import Window
+
+    from dabstract_spark.functions.hashing import md5_order
+    from dabstract_spark.operators.select import curriculum_order
+
+    df = spark.createDataFrame(
+        [(1, 0), (2, None), (3, None), (None, 1), (5, 1), (6, 0)], "id bigint, stage int"
+    )
+    got = {r["id"]: r["pos"] for r in curriculum_order(df, "stage", "id", seed=3).collect()}
+    w = Window.partitionBy(F.lit(0)).orderBy("stage", md5_order("id", 3), "id")
+    naive = {
+        r["id"]: r["pos"]
+        for r in df.withColumn("pos", F.row_number().over(w) - 1).collect()
+    }
+    assert got == naive
+    assert sorted(got.values()) == list(range(6))
+
 def test_temperature_mixture_sqrt_exact_and_budget(spark):
     import math
 

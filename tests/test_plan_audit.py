@@ -226,13 +226,15 @@ def test_decontaminate_no_cartesian(spark):
 #                mixture components); each carries a docstring bound,
 #                sequential_kfold-style.
 WINDOW_LIT0_BOUNDS = {
-    "core.py::with_row_id": ("bucket", "≤256 hex / 4·npart numeric buckets"),
+    "core.py::bucketed_rank": (
+        "bucket",
+        "keyless ranks: ≤256 hex / 4·npart numeric buckets (with_row_id), "
+        "256-row md5-prefix bucket counts (random_subsample, random_sample_n), "
+        "n_stages×256 composite bucket counts (curriculum_order)",
+    ),
     "operators/packing.py::block_prefix_sum": ("bucket", "~√n_blocks super-block totals (~233 at 16M rows/block)"),
     "operators/planning.py::budget_allocation": ("contract", "n_groups mixture components (docstring bound)"),
     "operators/planning.py::proportional_allocation": ("contract", "n_groups mixture components (docstring bound)"),
-    "operators/select.py::random_subsample": ("bucket", "256-row md5-prefix bucket counts"),
-    "operators/select.py::random_sample_n": ("bucket", "256-row md5-prefix bucket counts"),
-    "operators/select.py::curriculum_order": ("bucket", "n_stages×256 composite bucket counts"),
     "operators/sketches.py::hist_quantiles": ("codomain", "`bins` histogram rows (ungrouped branch)"),
     "operators/skew.py::key_skew_profile": ("limit-k", "top_k rows post-limit"),
     "operators/text.py::bm25_topk": ("limit-k", "k rows post-limit (TakeOrdered)"),

@@ -157,3 +157,45 @@ def test_mad_outliers_single_corpus_scan_via_checkpoints(spark):
         "_mad_internals localCheckpoint lineage cut is gone:\n" + plan[:2000]
     )
     assert "ExistingRDD" in plan  # the checkpointed collapse is the source
+
+
+def test_hintless_keyed_ranks_window_reuses_the_join_shuffle(spark):
+    """Without ``n_groups_hint`` the keyed bucketed ranks
+    (``core.bucketed_rank``) join their offsets table back through a
+    shuffle join, and the bucket-local window must run on THAT join's
+    partitioning: between the window and the join below it the plan
+    holds no Exchange. The group keys travel as one struct column whose
+    equality is null-safe, so the join stays a plain equi-join on the
+    window's own partition keys; an ``eqNullSafe`` join would shuffle on
+    coalesce/isnull rewrites of the keys and force a second exchange.
+    AQE and auto-broadcast are off so the planned join is the shuffle
+    join a high-cardinality group column gets."""
+    import re
+
+    from dabstract_spark.core import conf_override
+    from dabstract_spark.operators import select as sel
+
+    df = spark.createDataFrame(
+        [(i, None if i % 7 == 0 else f"g{i % 3}", i * 13 % 101, i % 5) for i in range(60)],
+        "rid long, grp string, v long, tok long",
+    )
+    cases = {
+        "grouped_rank_ppm": lambda: sel.grouped_rank_ppm(df, "grp", "v", "rid"),
+        "grouped_order_stats": lambda: sel.grouped_order_stats(df, "grp", "v", "rid"),
+        "token_budget_per_group": lambda: sel.token_budget_per_group(
+            df, "grp", "tok", ["v", "rid"], 40
+        ),
+    }
+    with conf_override(
+        spark,
+        {"spark.sql.adaptive.enabled": "false", "spark.sql.autoBroadcastJoinThreshold": "-1"},
+    ):
+        for name, build in cases.items():
+            lines = build()._jdf.queryExecution().executedPlan().toString().splitlines()
+            # the topmost Window is the bucket-local one in all three plans
+            top = next(i for i, ln in enumerate(lines) if re.search(r"\bWindow \[", ln))
+            below = [ln for ln in lines[top + 1 :] if "Exchange" in ln or "Join" in ln]
+            assert below and "SortMergeJoin" in below[0], (
+                f"{name}: the bucket-local window is not fed by the shuffle "
+                "join directly:\n" + "\n".join(lines)
+            )

@@ -615,7 +615,10 @@ def test_two_level_rank_law_vs_naive(spark, rows, n):
 
 @given(
     rows=st.lists(
-        st.tuples(st.integers(0, 2), st.integers(0, 1_000_000)),  # (group, ppm score)
+        st.tuples(
+            st.one_of(st.none(), st.integers(0, 2)),  # group (NULL = real partition)
+            st.one_of(st.none(), st.integers(0, 1_000_000)),  # ppm score (NULLS FIRST)
+        ),
         min_size=1,
         max_size=50,
     )
@@ -624,13 +627,14 @@ def test_two_level_rank_law_vs_naive(spark, rows, n):
 def test_grouped_rank_ppm_law_vs_naive(spark, rows):
     """Law: the composite value-bucket grouped_rank_ppm equals the naive
     per-group ROW_NUMBER rank/percentile for arbitrary score
-    distributions — including boundary scores, ties, and single-row
-    groups."""
+    distributions — including boundary scores, ties, single-row
+    groups, NULL groups (a real window partition) and NULL scores
+    (ranked first, Spark's ascending NULLS FIRST)."""
     from pyspark.sql import Window
 
     from dabstract_spark.operators.select import grouped_rank_ppm
 
-    data = [(i, f"g{g}", s) for i, (g, s) in enumerate(rows)]
+    data = [(i, None if g is None else f"g{g}", s) for i, (g, s) in enumerate(rows)]
     df = spark.createDataFrame(data, "row_id long, grp string, qp long")
     got = {
         r.row_id: (r.rank_in_group, r.pct_ppm)
@@ -651,6 +655,40 @@ def test_grouped_rank_ppm_law_vs_naive(spark, rows):
         .collect()
     }
     assert got == naive
+
+
+@given(
+    keys=st.lists(st.one_of(st.none(), st.integers(0, 40)), min_size=1, max_size=60),
+    ratio=st.sampled_from([0.0, 0.1, 0.25, 0.5, 0.9, 1.0]),
+    n=st.integers(0, 70),
+    seed=st.integers(0, 3),
+)
+@settings(**_SETTINGS)
+def test_exact_samples_law_vs_naive_sort_limit(spark, keys, ratio, n, seed):
+    """Law: the bucketed exact-count samples keep the same rows as the
+    naive global sort-limit ``orderBy(md5_order(key, seed),
+    key).limit(k)`` — k = ceil(n_rows·ratio) for random_subsample and
+    k = n for random_sample_n — for ARBITRARY key columns: NULL keys
+    (md5 of NULL sorts first), duplicate keys (identical md5 ranks),
+    k = 0 and k beyond the row count. Rows are compared as a key
+    multiset, which is all a tie between equal keys can decide."""
+    import math
+    from collections import Counter
+
+    from dabstract_spark.functions.hashing import md5_order
+    from dabstract_spark.operators.select import random_sample_n, random_subsample
+
+    df = spark.createDataFrame([(k,) for k in keys], "k long")
+
+    def naive(k):
+        return Counter(
+            r.k for r in df.orderBy(md5_order("k", seed), "k").limit(k).collect()
+        )
+
+    got = Counter(r.k for r in random_subsample(df, ratio, seed=seed, key="k").collect())
+    assert got == naive(math.ceil(len(keys) * ratio))
+    got_n = Counter(r.k for r in random_sample_n(df, n, seed=seed, key="k").collect())
+    assert got_n == naive(n)
 
 
 @given(
