@@ -245,6 +245,7 @@ def bucketed_rank(
     nulls_last: bool = False,
     weight: Column | None = None,
     total: str | None = None,
+    prune=None,
     n_groups_hint: int | None = None,
 ) -> DataFrame:
     """THE distributed bucketed rank: ``out`` = each row's 1-based
@@ -289,6 +290,12 @@ def bucketed_rank(
     when the row's whole inclusive prefix is — the naive window cumsum,
     NULL weights included.
 
+    ``prune``: a function that filters the offsets table (columns
+    ``__gk``, the bucket columns ``__b0``…, the bucket's count or sum
+    ``__cnt``, ``__off`` and ``total``) before it joins back; rows of a
+    dropped bucket drop from the result. Windows it runs partitioned by
+    ``__gk`` reuse the offsets windows' shuffle.
+
     Side tables broadcast statically under ``hinted_broadcast``
     (``n_groups_hint`` × ``BUCKET_TABLE_ROWS``; keyless = one group).
     Returns ``df``'s columns plus ``out`` (and ``total``)."""
@@ -313,11 +320,13 @@ def bucketed_rank(
     off = F.sum("__cnt").over(w.rowsBetween(Window.unboundedPreceding, -1))
     if weight is None:
         off = F.coalesce(off, F.lit(0))
-    cols = [*part, *bnames, off.alias("__off")]
+    cols = [*part, *bnames, "__cnt", off.alias("__off")]
     if total is not None:
         whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         cols.append(F.sum("__cnt").over(whole).alias(total))
     offsets = counts.select(*cols)
+    if prune is not None:
+        offsets = prune(offsets)
 
     local = Window.partitionBy(*part, *bnames).orderBy(*order)
     if weight is None:
@@ -330,7 +339,7 @@ def bucketed_rank(
     return (
         d.join(bcast(offsets), [*part, *bnames])
         .withColumn(out, val)
-        .drop(*part, *bnames, "__off")
+        .drop(*part, *bnames, "__cnt", "__off")
     )
 
 

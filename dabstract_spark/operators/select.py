@@ -696,15 +696,9 @@ def grouped_weighted_quantiles(
     callers needing DuckDB-oracle parity should feed non-NULL values
     (DuckDB windows order NULLS LAST).
 
-    The discipline is spelled out here rather than called: through the
-    helper, the pruning windows would run on the offsets table's own
-    partitioning and drop one shuffle from the recorded plan shape of
-    every caller (q194, q203, q229, q289, q298), so this function keeps
-    its own spelling until ``tests/fixtures/plan_inventory.json`` is
-    next regenerated. The side tables broadcast statically under
-    ``core.hinted_broadcast``; hint-less callers get plain joins AQE
-    converts at runtime."""
-    from dabstract_spark.core import BUCKET_TABLE_ROWS, hinted_broadcast
+    The side tables broadcast statically under ``core.hinted_broadcast``;
+    hint-less callers get plain joins AQE converts at runtime."""
+    from dabstract_spark.core import bucketed_rank
 
     vtype = counts.schema[value_col].dataType.simpleString()
     if not (
@@ -717,44 +711,6 @@ def grouped_weighted_quantiles(
             "numerically while the cumsum orders it lexicographically)"
         )
 
-    maybe_bcast = hinted_broadcast(n_groups_hint, BUCKET_TABLE_ROWS)
-
-    # one-parse composers (r12 chatter cut): the Column-by-Column form
-    # of this function cost ~420 py4j round trips per call (×2 per
-    # median/MAD caller); every block below builds the identical
-    # expression tree in one F.expr/selectExpr parse.
-    g = f"`{group_col}`"
-    v = f"`{value_col}`"
-    wsql = f"CAST(`{weight_col}` AS BIGINT)"
-    keyed = counts.withColumn("__k", F.expr(f"CAST({v} AS DOUBLE)"))
-    stats = keyed.groupBy(group_col).agg(
-        F.expr("min(__k) AS __kmin"), F.expr("max(__k) AS __kmax")
-    )
-    bucket_sql = (
-        "CASE WHEN __k IS NULL THEN -1"
-        " WHEN (__kmax - __kmin) <= 0 THEN 0"
-        " ELSE least(255, CAST(floor((__k - __kmin) * 256.0"
-        " / (__kmax - __kmin)) AS INT)) END"
-    )
-    # null-safe group join: a NULL group is a real window partition in
-    # the naive form, so it must match its own stats/offsets row here
-    st = stats.withColumnRenamed(group_col, "__g")
-    bucketed = (
-        keyed.join(maybe_bcast(st), F.expr(f"{g} <=> __g"))
-        .withColumn("__b", F.expr(bucket_sql))
-        .drop("__g", "__kmin", "__kmax")
-    )
-    sums = bucketed.groupBy(group_col, "__b").agg(F.expr(f"sum({wsql}) AS __t"))
-    # bounded by construction: <= n_groups × 257 rows
-    offsets = sums.selectExpr(
-        f"{g} AS __g",
-        "__b AS __ob",
-        "__t",
-        f"coalesce(sum(__t) OVER (PARTITION BY {g} ORDER BY __b"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __off",
-        f"sum(__t) OVER (PARTITION BY {g} ORDER BY __b"
-        " ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS __n",
-    )
     # BOUNDARY-BUCKET PRUNING: cum is non-decreasing in value order and
     # every threshold test is monotone, so each quantile's qualifying
     # rows form a suffix whose FIRST row lives in the unique bucket
@@ -767,35 +723,37 @@ def grouped_weighted_quantiles(
     # threshold or a crossing in the NULL bucket resolves there). The
     # bucket-local cumsum then touches <= k+2 buckets per group instead
     # of the whole table — the full-data path is pure map-side-combined
-    # aggregation.
+    # aggregation. The windows share the offsets windows' partitioning.
     crossing_sql = " OR ".join(
-        f"({int(den)} * (__off + __t) >= {int(num)} * __n"
-        f" AND {int(den)} * __off < {int(num)} * __n)"
+        f"({int(den)} * (coalesce(__off, 0) + __cnt) >= {int(num)} * __n"
+        f" AND {int(den)} * coalesce(__off, 0) < {int(num)} * __n)"
         for _, num, den in quantiles
     )
     w_grp_sql = (
-        "OVER (PARTITION BY __g ORDER BY __ob"
+        "OVER (PARTITION BY __gk ORDER BY __b0"
         " ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
     )
-    kept = (
-        offsets.selectExpr(
+
+    def boundary_buckets(offsets: DataFrame) -> DataFrame:
+        return offsets.selectExpr(
             "*",
-            f"min(__ob) {w_grp_sql} AS __bmin",
-            f"min(CASE WHEN __ob >= 0 THEN __ob END) {w_grp_sql} AS __bnn",
-        )
-        .filter(F.expr(f"({crossing_sql}) OR __ob = __bmin OR __ob = __bnn"))
-        .drop("__t", "__bmin", "__bnn")
-    )
-    # bucket-local running sum: each task holds <= 1/256 of one group's
-    # distinct values, and only boundary buckets survive the join
-    cum = bucketed.join(
-        maybe_bcast(kept), F.expr(f"{g} <=> __g AND __b = __ob")
-    ).withColumn(
+            f"min(__b0) {w_grp_sql} AS __bmin",
+            f"min(CASE WHEN __b0 >= 0 THEN __b0 END) {w_grp_sql} AS __bnn",
+        ).filter(
+            F.expr(f"({crossing_sql}) OR __b0 = __bmin OR __b0 = __bnn")
+        ).drop("__bmin", "__bnn")
+
+    v = f"`{value_col}`"
+    cum = bucketed_rank(
+        counts,
+        [group_col],
+        [value_col],
         "__cum",
-        F.expr(
-            f"__off + sum({wsql}) OVER (PARTITION BY {g}, __b ORDER BY {v}"
-            " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        ),
+        value_range=F.col(value_col),
+        weight=F.col(weight_col).cast("bigint"),
+        total="__n",
+        prune=boundary_buckets,
+        n_groups_hint=n_groups_hint,
     )
     picks = [
         F.expr(
